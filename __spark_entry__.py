@@ -719,7 +719,7 @@ def q_t7_mixture_sample(spark, sf_dir):
 
 def q_s5_frag_reassemble(spark, sf_dir):
     """S5 order-preserving reassembly, batch form of the streaming
-    fragment assembler (src/extraction/streaming.py; reference analog:
+    fragment assembler (src/extraction/streaming_staged.py; reference analog:
     the r1..rN -> explicit `order` sink discipline,
     /root/reference/src/detect_paragraphs.py output loop).
 
@@ -728,8 +728,8 @@ def q_s5_frag_reassemble(spark, sf_dir):
     ``array_join(transform(array_sort(collect_list(struct(frag_id,
     chunk)))))`` and verify the round trip is exact. collect_list order
     is nondeterministic in a distributed shuffle — the array_sort on the
-    (frag_id, chunk) struct is what restores it, the same contract the
-    stateful assembler implements across micro-batches. One shuffle on
+    (frag_id, chunk) struct is what restores it, the same idiom the
+    streaming assembler applies across micro-batches. One shuffle on
     doc_id; no window, no global sort."""
     d = _t(spark, sf_dir, "documents")
     frags = d.select(

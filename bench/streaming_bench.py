@@ -93,10 +93,7 @@ def _content_hash(spark, df):
 
 
 def _batch_leg(spark, src: str, out: str):
-    from pyspark.sql import functions as F
-
     from extraction.pipeline import extract
-    from extraction.streaming import FRAGMENTS_SCHEMA  # noqa: F401
     from extraction.streaming_staged import assemble_completed
 
     shutil.rmtree(out, ignore_errors=True)
@@ -110,7 +107,7 @@ def _batch_leg(spark, src: str, out: str):
 
 
 def _stream_leg(spark, src: str, work: str, files_per_trigger: int):
-    from extraction.streaming import FRAGMENTS_SCHEMA
+    from extraction.schema import FRAGMENTS_SCHEMA
     from extraction.streaming_staged import start_staged_assembly
 
     shutil.rmtree(work, ignore_errors=True)

@@ -32,6 +32,18 @@ DOCS_SCHEMA = StructType(
     ]
 )
 
+# streaming ingest unit: one slice of a doc's spans. The writer knows how
+# many fragments it split a doc into, so completion is the per-doc test
+# ``distinct frag_id count == n_frags`` (streaming_staged.py)
+FRAGMENTS_SCHEMA = StructType(
+    [
+        StructField("doc_id", StringType(), False),
+        StructField("frag_id", IntegerType(), False),
+        StructField("n_frags", IntegerType(), False),
+        StructField("spans", ArrayType(IN_SPAN, False), False),
+    ]
+)
+
 # output span struct (extracted.spans element)
 OUT_SPAN = StructType(
     [

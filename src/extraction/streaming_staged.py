@@ -1,17 +1,18 @@
-"""Staged fragment assembly — the PRODUCTION variant of streaming.py's
-buffer-in-state assembler (the design its own docstring sketches at
-streaming.py: counters + staging table + assembly join).
+"""Staged fragment assembly: interleaved fragment ingest -> complete docs,
+each emitted exactly once, then the batch kernel.
 
-Why a second implementation of the same contract: the state-store
-variant buffers each open document's accumulated span payload IN the
-state store, so every micro-batch that touches an open doc rewrites the
-whole payload (write amplification ~ O(doc size × batches-to-complete)),
-and a long-lived straggler pins its full payload in the store. Here the
-state store holds NOTHING:
+At 10^12-doc scale documents do not arrive atomically: an interleaved
+text+media document is written as FRAGMENTS (``schema.FRAGMENTS_SCHEMA``:
+``doc_id, frag_id in [0, n_frags), n_frags, spans``) that land across
+micro-batches, possibly more than once (at-least-once sources). The
+batch pipeline needs one complete ``(doc_id, spans)`` row per doc. This
+assembler closes that gap with NO state store:
 
 - every fragment lands exactly once in a STAGING table
   (``staging/batch=<id>/``, idempotently overwritten per micro-batch, so
-  a crashed re-run cannot double-land fragments);
+  a crashed re-run cannot double-land fragments). A fragment is written
+  once per delivery; an open doc's payload is never rewritten, which is
+  what a buffer-in-state design pays on every batch that touches it;
 - completion detection is a per-batch aggregate over the staged
   fragments of ONLY the doc_ids seen in this batch (broadcast semi-join
   prune — a doc can only newly complete in a batch that delivers one of
@@ -22,36 +23,34 @@ state store holds NOTHING:
   partition from the guard (and overwriting out/ledger per batch_id)
   makes the whole batch re-runnable: a crash between the output write
   and the ledger write replays to an identical overwrite instead of a
-  duplicate or a loss.
+  duplicate or a loss. A ledger that cannot be read fails the batch; it
+  never reads as empty, which would re-emit every prior doc.
 
 Duplicate deliveries dedup at READ time (``first`` over identical
 payloads grouped by (doc_id, frag_id) — the fragment contract says
 redeliveries are byte-identical), both before and after completion (a
 post-completion redelivery makes the doc complete again, and the ledger
-anti-join swallows it) — the same at-least-once guarantees as the
-tombstone design, without tombstone state.
+anti-join swallows it).
 
-Scale notes (the honest ledger): the per-batch completion check reads
-the staging table pruned by the batch's doc_id set. On plain parquet
-that is a footer-scan of all staging files; production staging is an
-Iceberg table bucketed by hash(doc_id) so the semi-join prunes to the
-touched buckets, and the ledger is likewise a bucketed table (or the
-completion counters move back into the state store as bytes-sized
-(seen, n_frags) pairs — either works; the point is the PAYLOAD never
-lives in the state store; that counters alternative is implemented as
-``streaming.mark_fragments`` + ``streaming.start_counter_assembly``). Stragglers that never complete simply age in
-staging — dead-lettering is a partition-age maintenance job instead of
-a state timeout.
+Scale notes: the per-batch completion check reads the staging table
+pruned by the batch's doc_id set. On plain parquet that is a
+footer-scan of all staging files; production staging is an Iceberg
+table bucketed by hash(doc_id) so the semi-join prunes to the touched
+buckets, and the ledger is likewise a bucketed table. Stragglers that
+never complete simply age in staging — dead-lettering is a
+partition-age maintenance job instead of a state timeout, and emitting
+a partial doc is never an option (output content would depend on
+timing).
 
 The reference has no streaming of any kind (batch over a closed image
-directory, /root/reference/src/detect_paragraphs.py); engine extension
-per SURVEY.md §7.6, same contract tests as streaming.assemble_extract.
+directory); this is an engine extension per SURVEY.md §7.6.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -59,10 +58,16 @@ from .pipeline import extract
 
 
 def _read_or_empty(spark: SparkSession, path: str, schema_ddl: str) -> DataFrame:
-    """Read a partitioned dir that may not exist yet (first batch)."""
+    """Read a partitioned dir that may not exist yet (first batch).
+
+    The schema is given, not inferred: inference samples one part file,
+    so a corrupt file could read as an empty table. Only a missing path
+    reads as empty; anything else raises."""
     try:
-        return spark.read.option("basePath", path).parquet(path)
-    except Exception:
+        return spark.read.schema(schema_ddl).option("basePath", path).parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return spark.createDataFrame([], schema_ddl)
 
 

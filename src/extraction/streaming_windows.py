@@ -1,7 +1,7 @@
 """Watermarked event-time operators: the late-data surface of the engine.
 
 Two operators close the one Structured-Streaming idiom the repo's
-stateful assemblers (streaming.py / streaming_staged.py) do not cover —
+fragment assembler (streaming_staged.py) does not cover —
 EVENT-time aggregation under a watermark, where rows may arrive out of
 order and a bounded lateness horizon decides when a window is final:
 
@@ -34,8 +34,7 @@ order and a bounded lateness horizon decides when a window is final:
 
 Scale notes. Both operators shuffle once on their group key
 (user_id+session / window+kind) with map-side partial aggregation;
-state per key is one running aggregate row, never a payload buffer
-(contrast the assembler's buffer-in-state caveat, streaming.py). The
+state per key is one running aggregate row, never a payload buffer. The
 session merge is Spark's native state-store session list — state is
 bounded by OPEN sessions only, because the watermark finalizes and
 evicts closed ones. Window state is bounded by (horizon / window)
@@ -48,7 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StructField, StructType, TimestampType
 
-from extraction.streaming import FRAGMENTS_SCHEMA
+from extraction.schema import FRAGMENTS_SCHEMA
 from extraction.textops import fingerprint
 
 # fragment contract + ingest event time (assigned by the crawler at

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from extraction.corpus import corpus_df
 from extraction.lineage import run_with_lineage
 from extraction.pipeline import run_extraction
-from extraction.streaming import FRAGMENTS_SCHEMA
+from extraction.schema import FRAGMENTS_SCHEMA
 from extraction.streaming_staged import start_staged_assembly
 
 N_DOCS = 100_000

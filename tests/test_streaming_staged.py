@@ -1,22 +1,45 @@
-"""Parity contract tests for the STAGED assembler (streaming_staged.py)
-— the production variant of streaming.py's buffer-in-state design.
-Same contract, same fixtures as test_streaming_assembly.py: duplicate
-deliveries, fragments straddling micro-batches, a held-back tail
-fragment across a stop/restart, exactly-once emission, span-sequence
-equality with the batch kernel.
+"""Contract tests for the staged fragment assembler (streaming_staged.py).
+
+Documents arrive as interleaved fragments scattered across micro-batch
+files — duplicate deliveries, fragments straddling micro-batches, and
+one doc whose tail fragment only lands after a stop/restart. Each doc
+must emit exactly once, when complete, span-sequence identical to the
+batch kernel run on the intact corpus.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+import shutil
+
+import pyarrow.parquet as pq
+import pytest
+from pyspark.errors import StreamingQueryException
 
 from extraction.corpus import gen_doc
 from extraction.oracle import extract_doc
-from extraction.streaming import FRAGMENTS_SCHEMA
+from extraction.schema import FRAGMENTS_SCHEMA
 from extraction.streaming_staged import start_staged_assembly
 
-from tests.test_streaming_assembly import N_DOCS, _fragments
+N_DOCS = 60  # covers all corpus families (i % 100 < 60): text, media, mixed
+
+
+def _fragments():
+    """Deterministic fragmentation: doc i splits into 1 + i%4 contiguous
+    chunks; fragment (i, f) is assigned to file (i + 2*f) % 5 so the
+    fragments of every multi-fragment doc straddle micro-batches."""
+    files = [[] for _ in range(5)]
+    for i in range(N_DOCS):
+        doc_id, spans = gen_doc(i)
+        n_frags = 1 + i % 4
+        cuts = [round(len(spans) * f / n_frags) for f in range(n_frags + 1)]
+        for f in range(n_frags):
+            row = (doc_id, f, n_frags, spans[cuts[f] : cuts[f + 1]])
+            files[(i + 2 * f) % 5].append(row)
+            if (i + f) % 7 == 0:  # at-least-once: duplicate delivery
+                files[(i + 2 * f + 3) % 5].append(row)
+    return files
 
 
 def _run(spark, src, work):
@@ -46,6 +69,13 @@ def _collect(spark, work):
     return got
 
 
+def _out_rows(work):
+    """Rows committed under out/, counted from the part files themselves
+    (a failed batch may leave a partition dir holding only _temporary)."""
+    parts = glob.glob(os.path.join(work, "out", "batch=*", "part-*.parquet"))
+    return sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
+
+
 def test_staged_assembly_matches_batch_kernel(spark, tmp_path):
     files = _fragments()
     src = str(tmp_path / "frags")
@@ -68,10 +98,8 @@ def test_staged_assembly_matches_batch_kernel(spark, tmp_path):
     assert held_doc not in got1, "incomplete doc must not emit"
     assert len(got1) == N_DOCS - 1
 
-    # the write-amplification claim, checked: every fragment row lands in
-    # staging exactly once per DELIVERY (no per-batch payload rewrite of
-    # open docs — the state-store variant rewrites an open doc's whole
-    # payload every touched batch)
+    # no write amplification: every fragment row lands in staging
+    # exactly once per DELIVERY (an open doc's payload is never rewritten)
     staged = spark.read.option(
         "basePath", os.path.join(work, "staging")
     ).parquet(os.path.join(work, "staging"))
@@ -101,11 +129,7 @@ def test_staged_batch_replay_is_idempotent(spark, tmp_path):
     """Crash-replay seam: re-running an already-committed batch's
     foreachBatch body (out written, ledger written, checkpoint lost)
     must overwrite to the identical result — no duplicate emission, no
-    loss. Simulated by invoking the batch processor directly twice."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from extraction.streaming_staged import _read_or_empty, assemble_completed
-
+    loss. Simulated by wiping the checkpoint and re-running the stream."""
     src = str(tmp_path / "frags")
     work = str(tmp_path / "work")
     doc_id, spans = gen_doc(7)
@@ -119,8 +143,6 @@ def test_staged_batch_replay_is_idempotent(spark, tmp_path):
 
     # replay: wipe the checkpoint so the SAME source files re-process as
     # fresh batches against the existing staging/ledger/out dirs
-    import shutil
-
     shutil.rmtree(os.path.join(work, "ckpt"))
     _run(spark, src, work)
     got2 = _collect(spark, work)
@@ -148,8 +170,32 @@ def test_staged_post_completion_redelivery_swallowed(spark, tmp_path):
     # and the out table holds exactly one copy (the _collect uniqueness
     # assert would fire on a doc_id-level dup; batch-level dirs can't
     # hide one because every batch overwrote its own partition)
-    n_rows = sum(
-        spark.read.parquet(p).count()
-        for p in glob.glob(os.path.join(work, "out", "batch=*"))
-    )
-    assert n_rows == 1
+    assert _out_rows(work) == 1
+
+
+def test_staged_corrupt_ledger_fails_instead_of_reemitting(spark, tmp_path):
+    """An unreadable ledger must fail the batch. Read as an empty ledger,
+    the anti-join would re-emit every doc it already emitted."""
+    src = str(tmp_path / "frags")
+    work = str(tmp_path / "work")
+    doc_id, spans = gen_doc(13)
+    row = (doc_id, 0, 1, spans)
+    spark.createDataFrame([row], FRAGMENTS_SCHEMA).coalesce(1).write.parquet(src)
+    _run(spark, src, work)
+    assert set(_collect(spark, work)) == {doc_id}
+
+    parts = glob.glob(os.path.join(work, "ledger", "batch=*", "part-*.parquet"))
+    assert parts
+    for p in parts:
+        with open(p, "r+b") as f:
+            f.truncate(os.path.getsize(p) // 2)
+        crc = os.path.join(os.path.dirname(p), f".{os.path.basename(p)}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+
+    spark.createDataFrame([row], FRAGMENTS_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    with pytest.raises(StreamingQueryException):
+        _run(spark, src, work)
+    assert _out_rows(work) == 1, "corrupt ledger must not re-emit a doc"
