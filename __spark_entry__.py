@@ -869,26 +869,6 @@ def q_dedup_exact(spark, sf_dir):
     )
 
 
-def q_dedup_minhash_sig(spark, sf_dir):
-    from extraction.dedup import minhash_signature
-
-    d = _par(spark, _t(spark, sf_dir, "documents"))
-    # signature materialized in its own projection: element_at picks from
-    # the ONE computed array (inlining the expression 4× would rebuild
-    # the shingle/md5 pipeline per output column — no CSE across HOFs)
-    sigd = d.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        minhash_signature(F.col("text"), k=3, perms=4).alias("sig"),
-    )
-    return sigd.select(
-        "doc_id",
-        F.element_at("sig", 1).alias("mh0"),
-        F.element_at("sig", 2).alias("mh1"),
-        F.element_at("sig", 3).alias("mh2"),
-        F.element_at("sig", 4).alias("mh3"),
-    )
-
-
 def q_dedup_minhash_lsh(spark, sf_dir):
     from extraction.dedup import minhash_lsh_candidates
 
@@ -1061,22 +1041,6 @@ def q_dedup_decontaminate_bloom(spark, sf_dir):
     return bloom_decontaminate_stats(train, bench, "text", "doc_id", k=3)
 
 
-def q_dedup_embedding_cosine(spark, sf_dir):
-    """Embedding near-dup, blocked by sign-LSH bucket — the scale shape:
-    the O(n²) cosine join runs only within buckets (16× fewer pairs at
-    4 planes), exactly how a 100 TB corpus would be blocked."""
-    from extraction.dedup import embedding_neardup_pairs
-    from extraction.similarity import sign_lsh_bucket
-
-    e = _par(spark, _t(spark, sf_dir, "embeddings")).withColumn(
-        "bucket", sign_lsh_bucket(F.col("embedding"), planes=4, dims=64)
-    )
-    pairs = embedding_neardup_pairs(
-        e, "embedding", "vec_id", threshold=0.5, block_col="bucket"
-    )
-    return pairs.groupBy().agg(F.count("*").alias("n_pairs"))
-
-
 def q_dedup_embedding_cosine_p8(spark, sf_dir):
     """Second operating point of the blocked embedding near-dup:
     planes=8 (256 buckets vs planes=4's 16). The point being
@@ -1111,39 +1075,6 @@ def q_dedup_embedding_cosine_p8(spark, sf_dir):
         )
     )
     return pairs.agg(F.count("*").alias("n_pairs")).crossJoin(bstats)
-
-
-def q_dedup_lsh_degenerate(spark, sf_dir):
-    """Sentinel-bucket guard under a degenerate-heavy corpus (the 100 TB
-    hazard): a third of docs emptied, a third shortened below the shingle
-    width k=3. Without the empty-shingle exclusion in
-    minhash_lsh_candidates all ~2n/3 degenerate docs share one sentinel
-    signature — one quadratic bucket per band; with it they never enter
-    banding. n_banded counts the docs that did."""
-    from extraction.dedup import minhash_lsh_candidates
-    from extraction.textops import normalize_text, words
-
-    d = _t(spark, sf_dir, "documents")
-    did = F.col("doc_id").cast("long")
-    mutated = d.select(
-        F.col("doc_id"),
-        F.when(did % 3 == 0, F.lit(""))
-        .when(did % 3 == 1, F.lit("tiny doc"))
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    mutated = _par(spark, mutated)
-    # the SAME word-count predicate the guard applies (dedup.py:124) —
-    # definitionally the set of docs that enter banding, and one
-    # normalize+split instead of the full k-shingle pipeline per row
-    stats = mutated.select(
-        (F.size(words(normalize_text(F.col("text")))) >= F.lit(3)).alias("banded")
-    ).agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.col("banded").cast("long")).alias("n_banded"),
-    )
-    pairs = minhash_lsh_candidates(mutated, "text", "doc_id", k=3, perms=16, bands=4)
-    return stats.crossJoin(pairs.agg(F.count("*").alias("n_candidate_pairs")))
 
 
 def q_dedup_simhash_pairs(spark, sf_dir):
@@ -1258,71 +1189,6 @@ def q_ann_lsh_buckets(spark, sf_dir):
         e.select(sign_lsh_bucket(F.col("embedding"), planes=4, dims=64).alias("bucket"))
         .groupBy("bucket")
         .agg(F.count("*").alias("n"))
-    )
-
-
-def q_ann_lsh_top1(spark, sf_dir):
-    from extraction.similarity import bucketed_topk
-
-    e = _par(spark, _t(spark, sf_dir, "embeddings"))
-    q = e.filter(F.col("vec_id") < 30)
-    return bucketed_topk(e, q, "embedding", "vec_id", k=1, planes=4, dims=64).select(
-        F.col("query_id").cast("long").alias("query_id"),
-        F.col("neighbor_id").cast("long").alias("neighbor_id"),
-    )
-
-
-def q_ann_multiprobe_top1(spark, sf_dir):
-    """Multi-probe sign-LSH top-1: query bucket + every 1-bit-flip
-    neighbor bucket (planes+1 probes) — the recall-recovery path as
-    planes scales with corpus size."""
-    from extraction.similarity import multiprobe_topk
-
-    e = _par(spark, _t(spark, sf_dir, "embeddings"))
-    q = e.filter(F.col("vec_id") < 30)
-    return multiprobe_topk(e, q, "embedding", "vec_id", k=1, planes=4, dims=64).select(
-        F.col("query_id").cast("long").alias("query_id"),
-        F.col("neighbor_id").cast("long").alias("neighbor_id"),
-    )
-
-
-def q_ann_ivf_top1(spark, sf_dir):
-    """IVF-flat top-1: nearest-centroid inverted lists, probe own list
-    only. Centroids = the first 8 corpus vectors (deterministic stand-in
-    for offline-trained k-means centroids). Runs on the ivf_join_topk
-    broadcast-DATA form — the literal-plan ivf_topk twin answers
-    identically (tests/test_dedup_similarity.py parity) but compiles
-    every centroid into the expression tree, which measured ~7s vs
-    ~1.3s here and degrades superlinearly with list count."""
-    from extraction.similarity import ivf_join_topk
-
-    e = _par(spark, _t(spark, sf_dir, "embeddings"))
-    cents = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").cast("long").alias("cid"), F.col("embedding").alias("cv")
-    )
-    q = e.filter(F.col("vec_id") < 30)
-    return ivf_join_topk(e, q, "embedding", "vec_id", centroids=cents, k=1).select(
-        F.col("query_id").cast("long").alias("query_id"),
-        F.col("neighbor_id").cast("long").alias("neighbor_id"),
-    )
-
-
-def q_ann_ivf_probe2_top1(spark, sf_dir):
-    """IVF-flat with nprobe=2: each query probes its two nearest lists —
-    the IVF recall lever (Voronoi-boundary analog of LSH multi-probe).
-    Broadcast-DATA centroid form (see q_ann_ivf_top1)."""
-    from extraction.similarity import ivf_join_topk
-
-    e = _par(spark, _t(spark, sf_dir, "embeddings"))
-    cents = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").cast("long").alias("cid"), F.col("embedding").alias("cv")
-    )
-    q = e.filter(F.col("vec_id") < 30)
-    return ivf_join_topk(
-        e, q, "embedding", "vec_id", centroids=cents, k=1, nprobe=2
-    ).select(
-        F.col("query_id").cast("long").alias("query_id"),
-        F.col("neighbor_id").cast("long").alias("neighbor_id"),
     )
 
 
@@ -1477,21 +1343,6 @@ def q_ann_recall_at_1(spark, sf_dir):
 
 
 # --- multimodal plumbing ---
-
-def q_multimodal_meta(spark, sf_dir):
-    """Binary-column metadata pass (decode stub is python-side; this checks
-    the SQL-visible plumbing: encode → byte length → mime routing)."""
-    d = _t(spark, sf_dir, "documents")
-    media = d.select(
-        F.concat(F.lit("media://"), F.col("doc_id").cast("string")).alias("media_ref"),
-        F.when(F.col("doc_id") % 2 == 0, F.lit("image/jpeg")).otherwise(F.lit("audio/wav")).alias("mime"),
-        F.encode(F.col("text"), "utf-8").alias("payload"),
-    )
-    return media.groupBy("mime").agg(
-        F.count("*").alias("n_files"),
-        F.sum(F.octet_length("payload")).alias("total_bytes"),
-    )
-
 
 def q_multimodal_features(spark, sf_dir):
     """Full mapInPandas decode path (stubbed codec). The FNV-1a header
@@ -2027,7 +1878,7 @@ def q_dedup_semantic(spark, sf_dir):
     within clusters, exact cosine >= 0.4 decided integer-exactly
     (dot²·den² >= num²·|a|²·|b|² in decimal(38,0); no float cosine,
     no sqrt). The learned-blocks complement of the fixed sign-LSH
-    blocking in dedup_embedding_cosine: at corpus scale k ~
+    blocking in dedup_embedding_cosine_p8: at corpus scale k ~
     n/target_block bounds the within-cluster pair work (SemDeDup used
     50k clusters on LAION); assignment is the broadcast-packed argmin
     so the corpus never shuffles to be blocked. k is derived from the
@@ -2054,49 +1905,6 @@ def q_dedup_semantic(spark, sf_dir):
     )
 
 
-def q_dedup_semantic_probe2(spark, sf_dir):
-    """SemDeDup with top-2 cluster assignment — the nprobe=2 recall
-    recovery for the single-assignment form's cluster-boundary blind
-    spot. Measured at the sf0.01 oracle point (cos >= 0.4, k=4): 59
-    exact ground-truth pairs, single assignment blocks 50.8% of them
-    together, top-2 assignment 96.6% (BENCH/DEDUP_RECALL.md) — the
-    same measured knob-vs-recall trade as ann_multiprobe_top1 and
-    ann_ivf_probe2_top1. See cluster.semantic_near_pairs_multi."""
-    from extraction.cluster import semantic_near_pairs_multi
-
-    e = _par(spark, _t(spark, sf_dir, "embeddings"))
-    n = e.count()
-    k = max(4, (n + 124) // 125)
-    return semantic_near_pairs_multi(
-        e, "embedding", "vec_id", k=k, iters=2, threshold_num=2,
-        threshold_den=5, fit_mod=max(1, n // 500),
-    )
-
-
-def q_dedup_semantic_sampled(spark, sf_dir):
-    """The SAMPLE-FIT SemDeDup path, driver-checked in its own right:
-    Lloyd iterations run on vec_id % 5 == 0 only (the production
-    fit-on-a-sample shape that keeps a k ∝ n operating point linear —
-    see cluster.kmeans_assign), then the FULL corpus is assigned once
-    and paired exactly. Pinning this path with its own oracle means
-    the scale form — not just the fit-on-everything oracle point — is
-    value-hash-verified."""
-    from extraction.cluster import semantic_near_pairs
-
-    e = _par(spark, _t(spark, sf_dir, "embeddings"))
-    n = e.count()
-    # fit_mod stays PINNED at 5 (that is the path this row exists to
-    # check; the oracle fixes it), but k scales with the corpus like
-    # every other semantic row — a fixed k makes the within-block pair
-    # stage quadratic in corpus growth (k=4 at the sf0.01 oracle point,
-    # k=40 at sf0.1; measured 8.5 s -> ~2 s at sf0.1)
-    k = max(4, (n + 124) // 125)
-    return semantic_near_pairs(
-        e, "embedding", "vec_id", k=k, iters=2, threshold_num=2,
-        threshold_den=5, fit_mod=5,
-    )
-
-
 def q_text_boilerplate_ngrams(spark, sf_dir):
     """Per-source boilerplate k-gram screen (dedup.boilerplate_ngram_
     stats): grams occurring in >= 2 distinct docs of the same source
@@ -2117,7 +1925,7 @@ def q_dedup_url_canonical(spark, sf_dir):
     one document). Raw crawl URLs are derived deterministically per doc
     — scheme http/https, host case, a leading www., utm_* tracking
     params, a trailing slash, and a fragment all vary by doc_id
-    arithmetic (the synth-input idiom of multimodal_meta);
+    arithmetic (the synth-input idiom);
     textops.canonical_url folds the variants; the groupBy elects
     min(doc_id) as keeper and count(DISTINCT raw) witnesses that
     canonicalization actually merged distinct raw forms. Reference
@@ -2210,7 +2018,7 @@ def q_corpus_snapshot_diff(spark, sf_dir):
     docs were ADDED, REMOVED, CHANGED (same id, different content
     fingerprint), or UNCHANGED between two corpus versions. The
     two crawls are derived deterministically from the one table (the
-    synth-input idiom of multimodal_meta): the new crawl dropped
+    synth-input idiom): the new crawl dropped
     id % 23 == 0 docs (→ removed), the old crawl lacked id % 19 == 0
     docs (→ added), and id % 7 == 0 docs carried an older text
     (→ changed); everything else is unchanged.
@@ -2413,29 +2221,6 @@ def q_t11_zorder_layout(spark, sf_dir):
             F.min("t").alias("min_t"),
             F.max("t").alias("max_t"),
         )
-    )
-
-
-def q_dedup_semantic_arrow(spark, sf_dir):
-    """SemDeDup on the ARROW assignment kernel — the scale form for a
-    k ∝ corpus-size operating point. Identical semantics and identical
-    oracle to dedup_semantic (the two assignment paths are bit-equal:
-    same int64 arithmetic, same first-minimum/lowest-cid tie rule —
-    tests/test_cluster_passages.py pins it; BENCH/KMEANS.md measures
-    the crossover: the expression fold is O(k·dims) interpreted ops
-    per point and hits 58 s at k=1024 on 20k vectors where the numpy
-    matmul inside mapInArrow holds 1.6 s flat and reaches k=8192 at
-    5.5 s). This row exists so the production assignment path — not
-    just the JVM-expression oracle-point path — is value-hash-verified
-    by the driver."""
-    from extraction.cluster import semantic_near_pairs
-
-    e = _par(spark, _t(spark, sf_dir, "embeddings"))
-    n = e.count()
-    k = max(4, (n + 124) // 125)
-    return semantic_near_pairs(
-        e, "embedding", "vec_id", k=k, iters=2, threshold_num=2,
-        threshold_den=5, fit_mod=max(1, n // 500), assign="arrow",
     )
 
 
@@ -3335,21 +3120,24 @@ def q_text_chunk_windows(spark, sf_dir):
     stride-overlapped chunks so no token is lost at a boundary (every
     position is covered, consecutive windows share width-stride
     tokens). Per chunk: token count, first/last token, and a portable
-    32-bit md5-prefix fingerprint of the joined tokens (the chunk-level
+    60-bit md5-prefix fingerprint of the joined tokens (the chunk-level
     dedup / index key). Reference analogue: the fragment split-reassemble
     order contract S5, /root/reference/src/HelperMethods.py:142-157.
 
-    Scale shape: ZERO shuffles — tokenize, explode window starts, and
-    derive per-chunk columns are all narrow maps, so the corpus
-    partitioning carries straight through and output cardinality is
+    Scale shape: ZERO shuffles after the tokenize checkpoint — exploding
+    window starts and deriving per-chunk columns are narrow maps over
+    the checkpointed token table, so its partitioning carries straight
+    through and output cardinality is
     bounded by (1 + width/stride) x corpus tokens. The window-start
     array is a cheap int sequence (the expensive token array is
     let-bound per row and the slice is referenced exactly ONCE —
     the interpreted-Generate discipline, CLAUDE.md); head/tail come
     from element_at, never a second slice. A 10^12-doc run is pure
-    map-side: no key, no skew, no exchange to size.
+    map-side: no key, no skew, no exchange to size. (The ``_par``
+    repartition ahead of tokenizing is a test-harness artifact: it only
+    spreads the single-row-group test parquet across cores.)
     """
-    from extraction.textops import normalize_text, words
+    from extraction.textops import fingerprint64, normalize_text, words
 
     W, S = 32, 24
     d = _par(spark, _t(spark, sf_dir, "documents"))
@@ -3377,21 +3165,9 @@ def q_text_chunk_windows(spark, sf_dir):
         F.element_at("toks", (F.col("start") + n_toks).cast("int")).alias(
             "tail"
         ),
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        " ", F.slice("toks", F.col("start") + 1, F.lit(W))
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("fp"),
+        fingerprint64(
+            F.concat_ws(" ", F.slice("toks", F.col("start") + 1, F.lit(W)))
+        ).alias("fp"),
     )
 
 
@@ -3403,7 +3179,8 @@ def q_dedup_chunk_boilerplate(spark, sf_dir):
     templated footers — the C4/RefinedWeb line-dedup signal lifted to
     fixed-width chunks). Emits every fingerprint spanning >= 2 docs
     with its occurrence count, doc span, and min-bound chunk witness
-    (n_toks/head/tail via MIN for determinism under the 32-bit fp).
+    (n_toks/head/tail via MIN for determinism should two chunks ever
+    share a 60-bit fp).
 
     Scale shape: the aggregation is TWO-LEVEL — per-(fp, doc_id)
     counts first (map-side partial), then per-fp over the already
@@ -3632,30 +3409,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_bm25_topk": q_text_bm25_topk,
         "text_chunk_windows": q_text_chunk_windows,
         "dedup_chunk_boilerplate": q_dedup_chunk_boilerplate,
-    }
-
-
-def variant_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Redundant operating-point variants of families whose representative
-    sits in ``queries()``. Demoted from the driver/bench contract in round
-    5 (they were 14.8s of the 95.1s r4 bench and 3 of them re-fit the same
-    k-means blocking model per run) — still oracle-checked, but in pytest
-    (``tests/test_variant_parity.py`` runs each against its DuckDB oracle
-    at sf0.001) and on demand via ``tools/compare_oracle.py --variants``.
-    Their oracle SQL stays in ``oracle_sql()``.
-    """
-    return {
-        "dedup_minhash_sig": q_dedup_minhash_sig,
-        "ann_lsh_top1": q_ann_lsh_top1,
-        "ann_ivf_top1": q_ann_ivf_top1,
-        "ann_ivf_probe2_top1": q_ann_ivf_probe2_top1,
-        "dedup_embedding_cosine": q_dedup_embedding_cosine,
-        "multimodal_meta": q_multimodal_meta,
-        "dedup_lsh_degenerate": q_dedup_lsh_degenerate,
-        "dedup_semantic_sampled": q_dedup_semantic_sampled,
-        "dedup_semantic_arrow": q_dedup_semantic_arrow,
-        "dedup_semantic_probe2": q_dedup_semantic_probe2,
-        "ann_multiprobe_top1": q_ann_multiprobe_top1,
     }
 
 

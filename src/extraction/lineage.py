@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -40,6 +41,10 @@ from .schema import LINEAGE_SCHEMA
 
 
 def committed_buckets(spark: SparkSession, lineage_path: str, run_id: str) -> set[int]:
+    """Buckets already committed for ``run_id``. Only a missing lineage
+    path or table reads as "nothing committed" (first run); an unreadable
+    lineage raises, since resuming past it would recompute and re-commit
+    every bucket."""
     try:
         rows = (
             read_back(spark, lineage_path, LINEAGE_SCHEMA)
@@ -47,7 +52,9 @@ def committed_buckets(spark: SparkSession, lineage_path: str, run_id: str) -> se
             .select("partition_id")
             .collect()
         )
-    except Exception:  # first run: lineage table does not exist yet
+    except AnalysisException as e:
+        if e.getCondition() not in ("PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND"):
+            raise
         return set()
     return {r.partition_id for r in rows}
 

@@ -710,20 +710,6 @@ SELECT COUNT(*) AS n_docs, COUNT(DISTINCT fp) AS n_distinct,
 FROM fp
 """
 
-ORACLES["dedup_minhash_sig"] = f"""
-WITH {_NORM_WORDS_CTE[1:]},
-{_WS_CTE[1:]},
-sh AS (
-  SELECT doc_id, {_shingles_expr(3)} AS shingles FROM wsed
-), hashed AS (
-  SELECT doc_id,
-         list_transform(shingles, s -> CAST(concat('0x', substr(md5(s), 1, 8)) AS BIGINT)) AS hashes
-  FROM sh
-)
-SELECT doc_id, {_minhash_cols(4)}
-FROM hashed
-"""
-
 # 16 perms in 4 bands of 4 rows over k=3 shingles (selective on this corpus).
 # Docs with an empty shingle set are excluded before banding (mirror of the
 # sentinel-bucket guard in dedup.minhash_lsh_candidates: empty-shingle docs
@@ -932,15 +918,6 @@ FROM train t JOIN bench b ON t.shingle = b.shingle
 GROUP BY t.doc_id
 """
 
-ORACLES["dedup_embedding_cosine"] = f"""
-WITH bucketed AS (
-  SELECT vec_id, embedding, {_lsh_bucket_expr("embedding")} AS bucket FROM embeddings
-)
-SELECT COUNT(*) AS n_pairs
-FROM bucketed a JOIN bucketed b ON a.vec_id < b.vec_id AND a.bucket = b.bucket
-WHERE {_cosine_expr("a.embedding", "b.embedding")} >= 0.5
-"""
-
 # planes=8 operating point + bucket-size evidence (the quadratic-bound
 # numbers: bucket count, largest bucket, Σ nb·(nb−1)/2 candidate pairs)
 ORACLES["dedup_embedding_cosine_p8"] = f"""
@@ -979,23 +956,6 @@ FROM ranked WHERE rn = 1
 ORACLES["ann_lsh_buckets"] = f"""
 SELECT {_lsh_bucket_expr("embedding")} AS bucket, COUNT(*) AS n
 FROM embeddings GROUP BY 1
-"""
-
-ORACLES["ann_lsh_top1"] = f"""
-WITH bucketed AS (
-  SELECT vec_id, embedding, {_lsh_bucket_expr("embedding")} AS bucket FROM embeddings
-), scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {_cosine_expr("q.embedding", "c.embedding")} AS cos_sim
-  FROM bucketed q JOIN bucketed c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
-  WHERE q.vec_id < 30
-), ranked AS (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rn
-  FROM scored
-)
-SELECT CAST(query_id AS BIGINT) AS query_id, CAST(neighbor_id AS BIGINT) AS neighbor_id
-FROM ranked WHERE rn = 1
 """
 
 # FNV-1a-style fold over the first 4096 payload bytes, bit-exact vs
@@ -1046,44 +1006,6 @@ WITH listing AS (
   FROM documents
 )
 SELECT doc_id, fname FROM listing WHERE fname LIKE '%.jpg'
-"""
-
-# degenerate-heavy corpus: 1/3 emptied, 1/3 below shingle width — the
-# sentinel guard must keep them out of banding (n_banded) and the pair
-# count bounded by the real-text third
-_MDOCS_CTE = """
-mdocs AS (
-  SELECT doc_id,
-         CASE WHEN CAST(doc_id AS BIGINT) % 3 = 0 THEN ''
-              WHEN CAST(doc_id AS BIGINT) % 3 = 1 THEN 'tiny doc'
-              ELSE text END AS text
-  FROM documents
-)"""
-
-ORACLES["dedup_lsh_degenerate"] = f"""
-WITH {_MDOCS_CTE[1:]},
-{_NORM_WORDS_CTE.replace("FROM documents", "FROM mdocs")[1:]},
-{_WS_CTE[1:]},
-sh AS (
-  SELECT doc_id, {_shingles_expr(3)} AS shingles FROM wsed
-), hashed AS (
-  SELECT doc_id,
-         list_transform(shingles, s -> CAST(concat('0x', substr(md5(s), 1, 8)) AS BIGINT)) AS hashes
-  FROM sh
-), stats AS (
-  SELECT COUNT(*) AS n_docs,
-         CAST(SUM(CASE WHEN len(shingles) > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_banded
-  FROM sh
-), sig AS (
-  SELECT doc_id, {_MH16} FROM hashed WHERE len(hashes) > 0
-), pairs AS (
-{_LSH_JOINS}
-), pcount AS (
-  SELECT COUNT(*) AS n_candidate_pairs FROM pairs
-)
-SELECT stats.n_docs AS n_docs, stats.n_banded AS n_banded,
-       pcount.n_candidate_pairs AS n_candidate_pairs
-FROM stats, pcount
 """
 
 # simhash banding: 4 chunks of 15 bits (60-bit hash, the widest
@@ -1174,88 +1096,9 @@ SELECT (SELECT COUNT(*) FROM tier_sim) AS n_simhash,
        (SELECT COUNT(*) FROM ver) AS n_verified
 """
 
-ORACLES["ann_multiprobe_top1"] = f"""
-WITH bucketed AS (
-  SELECT vec_id, embedding, {_lsh_bucket_expr("embedding")} AS bucket FROM embeddings
-), probes AS (
-  SELECT vec_id AS query_id, embedding AS qv,
-         unnest([bucket, xor(bucket, 1), xor(bucket, 2), xor(bucket, 4), xor(bucket, 8)]) AS probe
-  FROM bucketed WHERE vec_id < 30
-), scored AS (
-  SELECT p.query_id, c.vec_id AS neighbor_id,
-         {_cosine_expr("p.qv", "c.embedding")} AS cos_sim
-  FROM probes p JOIN bucketed c ON p.probe = c.bucket AND p.query_id <> c.vec_id
-), ranked AS (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rn
-  FROM scored
-)
-SELECT CAST(query_id AS BIGINT) AS query_id, CAST(neighbor_id AS BIGINT) AS neighbor_id
-FROM ranked WHERE rn = 1
-"""
-
-ORACLES["ann_ivf_top1"] = f"""
-WITH cents AS (
-  SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 8
-), assigned AS (
-  SELECT vec_id, lst FROM (
-    SELECT e.vec_id, c.cid AS lst,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY {_safe_cos("e.embedding", "c.cv")} DESC, c.cid ASC) AS rn
-    FROM embeddings e CROSS JOIN cents c
-  ) WHERE rn = 1
-), listed AS (
-  SELECT e.vec_id, e.embedding, a.lst FROM embeddings e JOIN assigned a USING (vec_id)
-), scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {_safe_cos("q.embedding", "c.embedding")} AS cos_sim
-  FROM listed q JOIN listed c ON q.lst = c.lst AND q.vec_id <> c.vec_id
-  WHERE q.vec_id < 30
-), ranked AS (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rn
-  FROM scored
-)
-SELECT CAST(query_id AS BIGINT) AS query_id, CAST(neighbor_id AS BIGINT) AS neighbor_id
-FROM ranked WHERE rn = 1
-"""
-
-ORACLES["ann_ivf_probe2_top1"] = f"""
-WITH cents AS (
-  SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 8
-), assigned AS (
-  SELECT vec_id, lst FROM (
-    SELECT e.vec_id, c.cid AS lst,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY {_safe_cos("e.embedding", "c.cv")} DESC, c.cid ASC) AS rn
-    FROM embeddings e CROSS JOIN cents c
-  ) WHERE rn = 1
-), listed AS (
-  SELECT e.vec_id, e.embedding, a.lst FROM embeddings e JOIN assigned a USING (vec_id)
-), probes AS (
-  SELECT vec_id AS query_id, embedding AS qv, lst AS probe FROM (
-    SELECT e.vec_id, e.embedding, c.cid AS lst,
-           row_number() OVER (PARTITION BY e.vec_id
-             ORDER BY {_safe_cos("e.embedding", "c.cv")} DESC, c.cid ASC) AS rn
-    FROM embeddings e CROSS JOIN cents c
-    WHERE e.vec_id < 30
-  ) WHERE rn <= 2
-), scored AS (
-  SELECT p.query_id, c.vec_id AS neighbor_id,
-         {_safe_cos("p.qv", "c.embedding")} AS cos_sim
-  FROM probes p JOIN listed c ON p.probe = c.lst AND p.query_id <> c.vec_id
-), ranked AS (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id ASC) AS rn
-  FROM scored
-)
-SELECT CAST(query_id AS BIGINT) AS query_id, CAST(neighbor_id AS BIGINT) AS neighbor_id
-FROM ranked WHERE rn = 1
-"""
-
-# join-form IVF at 64 centroids: relationally identical to ann_ivf_top1
-# (the Spark-side difference — centroids as broadcast DATA vs plan
-# literals — is invisible to SQL, which is exactly the contract)
+# join-form IVF at 64 centroids (the Spark-side choice — centroids as
+# broadcast DATA vs plan literals — is invisible to SQL, which is
+# exactly the contract)
 ORACLES["ann_ivf_join_top1"] = f"""
 WITH cents AS (
   SELECT vec_id AS cid, embedding AS cv FROM embeddings WHERE vec_id < 64
@@ -1323,13 +1166,6 @@ SELECT COUNT(*) AS n_queries,
        CAST(SUM(CASE WHEN lsh.lsh_nid = bf.bf_nid THEN 1 ELSE 0 END) AS BIGINT) AS lsh_hits,
        CAST(SUM(CASE WHEN mp.mp_nid = bf.bf_nid THEN 1 ELSE 0 END) AS BIGINT) AS multiprobe_hits
 FROM bf LEFT JOIN lsh USING (query_id) LEFT JOIN mp USING (query_id)
-"""
-
-ORACLES["multimodal_meta"] = """
-SELECT CASE WHEN doc_id % 2 = 0 THEN 'image/jpeg' ELSE 'audio/wav' END AS mime,
-       COUNT(*) AS n_files,
-       CAST(SUM(octet_length(encode(text))) AS BIGINT) AS total_bytes
-FROM documents GROUP BY 1
 """
 
 ORACLES["bucketed_join_stats"] = """
@@ -1770,65 +1606,14 @@ WHERE dot > 0
 """
 
 
-ORACLES["dedup_semantic"] = _semantic_dedup_oracle()
-
-
-def _semantic_dedup_probe2_oracle(
-    k: int = 4,
-    iters: int = 2,
-    dims: int = 64,
-    grid: int = 16384,
-    num: int = 2,
-    den: int = 5,
-    fit_mod: int = 1,
-) -> str:
-    """Top-2-assignment SemDeDup mirror (cluster.semantic_near_pairs_multi):
-    every point belongs to its TWO nearest final centroids (rn <= 2 of
-    the shared Lloyd chain's ORDER BY dist, cid — identical tie rule to
-    the Spark fold); pairs passing the threshold in both shared blocks
-    dedupe via the GROUP BY, with the shared-block count as witness."""
-    dot = (
-        f"CAST(list_sum(list_transform(range(1, {dims + 1}), "
-        f"i -> x.qv[i] * y.qv[i])) AS BIGINT)"
-    )
-    return f"""
-WITH {_kmeans_ctes(k, iters, dims, grid, fit_mod)},
-feat AS (
-  SELECT a.vec_id, a.cid, p.qv,
-         CAST(list_sum(list_transform(p.qv, v -> v * v)) AS BIGINT) AS n2
-  FROM aF a JOIN pts p USING (vec_id)
-  WHERE a.rn <= 2
-),
-cand AS (
-  SELECT x.vec_id AS id_a, y.vec_id AS id_b,
-         {dot} AS dot, x.n2 AS n2_a, y.n2 AS n2_b
-  FROM feat x JOIN feat y ON x.cid = y.cid AND x.vec_id < y.vec_id
-)
-SELECT CAST(id_a AS BIGINT) AS id_a,
-       CAST(id_b AS BIGINT) AS id_b,
-       CAST(COUNT(*) AS BIGINT) AS n_shared_blocks
-FROM cand
-WHERE dot > 0
-  AND CAST(dot AS HUGEINT) * dot * {den * den}
-      >= CAST({num * num} AS HUGEINT) * n2_a * n2_b
-GROUP BY id_a, id_b
-"""
-
-
-ORACLES["dedup_semantic_probe2"] = _semantic_dedup_probe2_oracle()
-
-# the SAMPLE-FIT scale path, driver-checked in its own right: Lloyd
-# iterations on vec_id % 5 = 0 (100 of 500 points), full-corpus
-# assignment and exact pairing — the operating shape the entry queries
-# use at any sf where n // 500 > 1
-#
-# VALIDITY NOTE (applies to all dedup_semantic* / emb_kmeans oracles):
+# VALIDITY NOTE (applies to the dedup_semantic and emb_kmeans oracles):
 # the oracles pin k=4 and their own fit_mod, which equals the entry
 # queries' n-derived values ONLY at the sf0.01 driver point (n=500 ->
 # k=max(4, ceil(500/125))=4). compare_oracle against any other sf dir
 # reports a spurious mismatch for this family — same caveat CLAUDE.md
 # records for fit_mod.
-ORACLES["dedup_semantic_sampled"] = _semantic_dedup_oracle(fit_mod=5)
+ORACLES["dedup_semantic"] = _semantic_dedup_oracle()
+
 
 # per-source boilerplate k-gram screen (dedup.boilerplate_ngram_stats):
 # positional 3-grams over the normalized text, df counted as DISTINCT
@@ -2010,13 +1795,6 @@ SELECT canon,
 FROM canon
 GROUP BY canon
 """
-
-
-# the ARROW assignment kernel (cluster._arrow_assigner): bit-identical
-# to the fold form by construction, so the oracle is the SAME SQL as
-# dedup_semantic — the row pins the production (numpy-matmul mapInArrow)
-# path to the identical values the expression path produces
-ORACLES["dedup_semantic_arrow"] = _semantic_dedup_oracle()
 
 
 # S7 JSONL round-trip: the Spark query writes the corpus as line-JSON,
@@ -2970,8 +2748,8 @@ FROM ranked WHERE rnk <= 10
 # start set exactly (largest multiple of 24 strictly below n);
 # DuckDB list slicing toks[a:b] is 1-based end-inclusive and clamps at
 # the list end exactly like F.slice(toks, a, 32) near the tail. The
-# chunk fingerprint is the portable 32-bit md5-prefix of the
-# space-joined slice (the house cross-engine hash); head/tail read
+# chunk fingerprint is the portable 60-bit md5-prefix of the
+# space-joined slice (textops.fingerprint64's form); head/tail read
 # single elements so the slice is evaluated once per row on both
 # engines.
 _CHUNK_SQL = r"""
@@ -2993,7 +2771,7 @@ SELECT doc_id,
        toks[CAST(start + 1 AS INTEGER)] AS head,
        toks[CAST(start + LEAST(32, len(toks) - start) AS INTEGER)] AS tail,
        CAST(concat('0x', substr(md5(array_to_string(
-         toks[CAST(start + 1 AS INTEGER):CAST(start + 32 AS INTEGER)], ' ')), 1, 8))
+         toks[CAST(start + 1 AS INTEGER):CAST(start + 32 AS INTEGER)], ' ')), 1, 15))
          AS BIGINT) AS fp
 FROM win
 """
@@ -3004,7 +2782,7 @@ ORACLES["text_chunk_windows"] = _CHUNK_SQL
 # Chunk-level boilerplate detection (mirror of q_dedup_chunk_boilerplate):
 # the consume side of the chunk table — fingerprints spanning >= 2
 # distinct docs, with the same two-level (fp, doc) -> fp aggregation so
-# the MIN-witness columns resolve identically under 32-bit fp collisions.
+# the MIN-witness columns resolve identically under 60-bit fp collisions.
 ORACLES["dedup_chunk_boilerplate"] = f"""
 WITH cw AS ({_CHUNK_SQL}),
 per_doc AS (

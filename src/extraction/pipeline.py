@@ -178,14 +178,11 @@ def repartition_packed(
 def run_extraction(
     docs: DataFrame,
     num_partitions: int | None = None,
-    skew_salting: bool = True,
     heavy_docs_hint: int | None = None,
 ) -> DataFrame:
     """Full pipeline: optional skew-aware repartition + kernel."""
-    if num_partitions and skew_salting:
+    if num_partitions:
         docs = repartition_packed(
             docs, num_partitions, heavy_docs_hint=heavy_docs_hint
         )
-    elif num_partitions:
-        docs = docs.repartition(num_partitions, F.xxhash64("doc_id"))
     return extract(docs)

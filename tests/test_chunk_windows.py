@@ -131,6 +131,17 @@ def test_chunk_boilerplate_on_constructed_corpus(spark, tmp_path):
     assert d3[0]["fp"] not in by_fp
 
 
+def test_chunk_fp_no_32bit_collision(spark, tmp_path):
+    """One-token docs "c5373" and "c45389" share the 8-hex-digit md5
+    prefix f5c8b142: a 32-bit fingerprint makes them one chunk and
+    reports it as cross-doc boilerplate. The 60-bit fp keeps them
+    apart."""
+    rows = [(0, "c5373", "en"), (1, "c45389", "en")]
+    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    assert entry.q_dedup_chunk_boilerplate(spark, str(tmp_path)).collect() == []
+
+
 def test_chunk_testdata_shape_and_oracle_parity(spark):
     sf = "/root/testdata/sf0.001"
     sdf = entry.q_text_chunk_windows(spark, sf)

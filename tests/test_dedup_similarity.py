@@ -145,7 +145,8 @@ def test_multiprobe_dominates_single_probe(spark):
     assert hits_multi >= hits_single
 
 
-# --- IVF: join-form (centroids as data) must equal literal-form ---
+# --- IVF: join-form (centroids as data) must equal literal-form, and
+# probing every list must equal brute force ---
 
 def test_ivf_join_form_matches_literal_form(spark):
     from extraction.similarity import ivf_join_topk, ivf_topk
@@ -157,7 +158,7 @@ def test_ivf_join_form_matches_literal_form(spark):
     cents_df = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").cast("long").alias("cid"), F.col("embedding").alias("cv")
     )
-    for nprobe in (1, 2):
+    for nprobe in (1, 2, 8):
         lit = {
             (r.query_id, r.rank): r.neighbor_id
             for r in ivf_topk(
@@ -172,6 +173,14 @@ def test_ivf_join_form_matches_literal_form(spark):
         }
         # identical output contract: same (query, rank) -> neighbor map
         assert join == lit
+    # probing all 8 lists scans the whole corpus, so the answer is the
+    # exact top-k (sf0.001 has no zero-norm vectors, the only inputs on
+    # which cosine_sim_safe and cosine_sim differ)
+    exact = {
+        (r.query_id, r.rank): r.neighbor_id
+        for r in brute_force_topk(emb, q, "embedding", "vec_id", k=2).collect()
+    }
+    assert join == exact
 
 
 def test_ivf_join_form_nan_pins_to_sentinel(spark):

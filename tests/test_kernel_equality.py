@@ -55,7 +55,7 @@ def test_parallelism_invariance(spark, corpus, golden):
 
 def test_skew_salted_path(spark, corpus, golden):
     df = spark.createDataFrame(corpus, schema=DOCS_SCHEMA)
-    out = run_extraction(df, num_partitions=8, skew_salting=True)
+    out = run_extraction(df, num_partitions=8)
     assert_matches_golden(out.collect(), golden)
 
 

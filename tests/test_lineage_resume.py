@@ -1,7 +1,10 @@
 """Resume test (SURVEY.md §5.5): kill after k of n commits, rerun, assert
 identical final table and no duplicate partitions."""
 
+import os
+
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from extraction.corpus import gen_corpus
 from extraction.lineage import committed_buckets, run_with_lineage
@@ -72,3 +75,29 @@ def test_second_resume_is_noop(spark, docs, tmp_path):
                      buckets_per_commit=PER_COMMIT)
     assert spark.read.parquet(lin).count() == before
     assert read_result(spark, out) == golden()
+
+
+def test_unreadable_lineage_raises_instead_of_recommitting(spark, docs, tmp_path):
+    """A lineage table that exists but cannot be read must stop the
+    resume. Reading it as "nothing committed" would recompute every
+    bucket and append a duplicate lineage row per bucket."""
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lineage")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_with_lineage(spark, docs, out, lin, "run-d", num_buckets=BUCKETS,
+                         buckets_per_commit=PER_COMMIT, fail_after_commits=2)
+
+    def lineage_files():
+        return sorted(
+            os.path.join(d, f)
+            for d, _, fs in os.walk(lin) for f in fs if f.endswith(".parquet")
+        )
+
+    parts = lineage_files()
+    assert parts
+    for p in parts:  # cut every part file in half: footer gone
+        with open(p, "r+b") as f:
+            f.truncate(os.path.getsize(p) // 2)
+    with pytest.raises(Py4JJavaError):  # the parquet read fails in a task
+        run_with_lineage(spark, docs, out, lin, "run-d", num_buckets=BUCKETS,
+                         buckets_per_commit=PER_COMMIT)
+    assert lineage_files() == parts  # no lineage rows appended

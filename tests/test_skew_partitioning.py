@@ -86,9 +86,8 @@ def test_packed_extraction_content_identical(spark):
         for r in run_extraction(docs, num_partitions=None).collect()
     )
     for kwargs in (
-        {"num_partitions": 8, "skew_salting": True},
-        {"num_partitions": 8, "skew_salting": False},
-        {"num_partitions": 8, "skew_salting": True, "heavy_docs_hint": 10**6},
+        {"num_partitions": 8},
+        {"num_partitions": 8, "heavy_docs_hint": 10**6},
     ):
         got = sorted(
             (r.doc_id, tuple(sorted((s.order, s.kind, s.text, s.media_ref) for s in r.spans)))

@@ -32,11 +32,6 @@ def main() -> int:
         i = argv.index("--json")
         json_out = argv[i + 1]
         del argv[i : i + 2]
-    # --variants: also include the demoted operating-point variants
-    # (entry.variant_queries()) beyond the driver contract
-    variants = "--variants" in argv
-    if variants:
-        argv.remove("--variants")
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
@@ -65,8 +60,6 @@ def main() -> int:
 
     spark = build_session("local[8]", shuffle_partitions=16, app="oracle-compare")
     qs = entry.queries()
-    if variants or (only and not only.isdisjoint(entry.variant_queries())):
-        qs = {**qs, **entry.variant_queries()}
     oracles = entry.oracle_sql()
     failures = []
     ok_rows: dict[str, int] = {}
@@ -80,10 +73,6 @@ def main() -> int:
         except Exception as e:
             failures.append(name)
             print(f"FAIL  {name}: spark error: {type(e).__name__}: {str(e)[:300]}")
-            continue
-        if name not in oracles:
-            print(f"ok    {name}: rows-only ({len(srows)} rows)")
-            ok_rows[name] = len(srows)
             continue
         try:
             try:
