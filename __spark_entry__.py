@@ -1365,7 +1365,8 @@ def q_bucketed_join_stats(spark, sf_dir):
     as catalog tables bucketed on their join keys (8 buckets each), then
     joined co-located — the 100-TB shape where both fact tables pay the
     hash shuffle once at write time and every later equi-join plans with
-    zero Exchange (asserted in docs/PLANS.md "bucketed co-located join";
+    zero Exchange (asserted by the "bucketed co-located join" check of
+    tools/explain_plans.py, run by tests/test_plans.py;
     tests/test_bucketing.py pins the plan shape with broadcast disabled).
     The RESULT is plain join+group semantics, so a vanilla SQL oracle
     checks that bucketing changed the plan, not the answer.
@@ -3190,8 +3191,13 @@ def q_dedup_chunk_boilerplate(spark, sf_dir):
     reducer per hot fp, while the two-level form's second stage moves
     only one row per (fp, doc). Both stages partial-agg map-side; the
     chunk derivation itself is the zero-shuffle narrow map of
-    text_chunk_windows."""
-    chunks = q_text_chunk_windows(spark, sf_dir)
+    text_chunk_windows.
+
+    Only FULL windows (n_toks == 32) count: a doc's short tail window
+    can be a single common word, and two docs ending in the same few
+    tokens do not share boilerplate (the min-length floor of C4-style
+    line dedup)."""
+    chunks = q_text_chunk_windows(spark, sf_dir).where(F.col("n_toks") == 32)
     per_doc = chunks.groupBy("fp", "doc_id").agg(
         F.count("*").cast("long").alias("k"),
         F.min("n_toks").alias("mnt"),

@@ -4,12 +4,12 @@ batch over IDENTICAL fragment input — the "streaming tax", measured.
 
 The streaming family has exact-equality correctness coverage
 (tests/test_streaming_staged.py, tests/test_streaming_soak.py) but no
-performance evidence; this closes that gap. Protocol mirrors the
-invariance brackets' self-controlled sandwich: batch-a -> streaming ->
-batch-b inside ONE session on one corpus, so the streaming/batch ratio
-is judged against the batch legs' own spread rather than an absolute
-number this noisy-neighbor box can't hold still (BENCH/BASELINE.md
-measurement protocol note).
+performance evidence; this closes that gap. Protocol is a
+self-controlled sandwich: batch-a -> streaming -> batch-b inside ONE
+session on one corpus, so the streaming/batch ratio is judged against
+the batch legs' own spread rather than an absolute number a
+noisy-neighbor host can't hold still (BENCH/BASELINE.md measurement
+protocol note).
 
 Input: every doc split into two fragments at the span midpoint (the
 soak test's shape), written across --files parquet files so fragments
@@ -46,11 +46,25 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 SRC = os.path.join(REPO, "src")
-sys.path.insert(0, HERE)
 sys.path.insert(0, SRC)
 os.environ["PYTHONPATH"] = SRC + os.pathsep + os.environ.get("PYTHONPATH", "")
 
-from invariance import membw_gbps  # noqa: E402
+
+def membw_gbps() -> float:
+    """Median-of-5 memcpy bandwidth (GB/s) on a 200 MB buffer — the
+    cheap discriminator for a host's invisible memory-bandwidth
+    contention, recorded around each leg."""
+    import numpy as np
+
+    buf = np.zeros(200_000_000, dtype=np.uint8)
+    buf.fill(1)
+    walls = []
+    for _ in range(5):
+        t0 = time.perf_counter()
+        c = buf.copy()
+        walls.append(time.perf_counter() - t0)
+        del c
+    return round(0.2 / statistics.median(walls), 2)
 
 
 def _fragments(docs, n_files: int):

@@ -8,8 +8,9 @@ the bucket spec in the catalog. Any later equi-join between two tables
 bucketed on their join keys with the SAME bucket count plans as a
 sort-merge join with ZERO Exchange operators — Spark proves both sides
 already share the required HashPartitioning and, with one sorted file
-per bucket, skips the per-side Sort too (asserted in docs/PLANS.md
-"bucketed co-located join").
+per bucket, skips the per-side Sort too (asserted by the "bucketed
+co-located join" check of tools/explain_plans.py, run by
+tests/test_plans.py).
 
 Reference analog: the reference engine re-reads its per-document
 artifacts keyed by filename for every evaluate/train pass

@@ -14,7 +14,7 @@ hard-coding either format:
   ``df.writeTo(t).append()``.
 - any other ref is a filesystem path: schema-pinned parquet reads,
   hive-style dynamic partition overwrite, append parquet writes — the
-  exact behavior the test suite and the scaling bench exercise.
+  exact behavior the test suite and the benchmarks exercise.
 
 The dispatch itself (ref parsing, catalog-configured detection, which
 write verb fires) is plain logic and is unit-tested without any Iceberg

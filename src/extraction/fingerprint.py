@@ -1,10 +1,9 @@
 """Source-fingerprint helper for stale-cache guards.
 
-Three caches key on the content of generator/spec sources so an edit can
-never silently reuse stale artifacts: the bench corpus
-(bench.py), the scaling-protocol corpus (bench/scaling.py), and the
-materialized pure-Python oracle table (oracle_materialize.py). They must
-all fingerprint the same way — a cache-invalidation fix applied to one
+Two caches key on the content of generator/spec sources so an edit can
+never silently reuse stale artifacts: the bench corpus (bench.py) and
+the materialized pure-Python oracle table (oracle_materialize.py). They
+must fingerprint the same way — a cache-invalidation fix applied to one
 copy but not the others would reintroduce exactly the bug class the
 fingerprints exist to prevent — so the hashing lives here once.
 """

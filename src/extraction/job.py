@@ -12,7 +12,7 @@ Usage (north_rule: ships via --py-files; bench/package.sh builds the zip):
 launched before this file's SparkSession config is read.)
 
 ``--gen N`` generates the deterministic synthetic corpus (corpus.py)
-instead of reading ``--input`` — used by the scaling bench.
+instead of reading ``--input`` (the crash/resume smoke run uses it).
 """
 
 from __future__ import annotations
@@ -22,12 +22,7 @@ import sys
 import time
 
 
-def build_session(
-    master: str | None,
-    shuffle_partitions: int,
-    app: str = "extraction",
-    max_partition_bytes: int | None = None,
-):
+def build_session(master: str | None, shuffle_partitions: int, app: str = "extraction"):
     from pyspark.sql import SparkSession
 
     import os as _os
@@ -93,12 +88,6 @@ def build_session(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
         .config("spark.sql.parquet.compression.codec", "zstd")
     )
-    if max_partition_bytes:
-        # benches read a tiny (tens of MB) corpus: the 128 MB default
-        # bin-packs the whole scan into a couple of tasks and the job
-        # measures single-core parquet decode. Production keeps the
-        # default (row groups are ~128 MB there).
-        b = b.config("spark.sql.files.maxPartitionBytes", str(max_partition_bytes))
     if master:
         b = b.master(master)
     return b.getOrCreate()
@@ -125,14 +114,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--partitions", type=int, default=None)
     p.add_argument("--shuffle-partitions", type=int, default=64)
     p.add_argument("--master", default=None)
-    p.add_argument("--max-partition-bytes", type=int, default=None)
     p.add_argument("--fail-after", type=int, default=None, help="inject crash after k commits (resume test)")
-    p.add_argument(
-        "--warmup-docs", type=int, default=0,
-        help="run the pipeline over N synthetic docs before the timed run "
-             "(JIT + python-worker warmup; a production job amortizes this "
-             "over hours — a 60 s bench run does not)",
-    )
     a = p.parse_args(argv)
 
     from extraction.catalog import current_snapshot_id, read_back, read_docs
@@ -140,9 +122,7 @@ def main(argv: list[str] | None = None) -> int:
     from extraction.lineage import run_with_lineage
     from extraction.schema import DOCS_SCHEMA
 
-    spark = build_session(
-        a.master, a.shuffle_partitions, max_partition_bytes=a.max_partition_bytes
-    )
+    spark = build_session(a.master, a.shuffle_partitions)
     try:
         if a.mode == "recipe":
             from extraction.recipe import run_recipe_sink
@@ -180,16 +160,6 @@ def main(argv: list[str] | None = None) -> int:
             # into every lineage row
             docs = read_docs(spark, a.input, DOCS_SCHEMA)
             snapshot_id = current_snapshot_id(spark, a.input)
-        if a.warmup_docs:
-            from extraction.pipeline import run_extraction
-
-            warm = corpus_df(
-                spark, a.warmup_docs, heavy_spans=a.heavy_spans,
-                slices=a.partitions or 32,
-            )
-            run_extraction(warm, num_partitions=a.partitions).write.format(
-                "noop"
-            ).mode("overwrite").save()
         t0 = time.monotonic()
         run_with_lineage(
             spark,

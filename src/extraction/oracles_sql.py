@@ -2780,15 +2780,16 @@ ORACLES["text_chunk_windows"] = _CHUNK_SQL
 
 
 # Chunk-level boilerplate detection (mirror of q_dedup_chunk_boilerplate):
-# the consume side of the chunk table — fingerprints spanning >= 2
-# distinct docs, with the same two-level (fp, doc) -> fp aggregation so
-# the MIN-witness columns resolve identically under 60-bit fp collisions.
+# the consume side of the chunk table — fingerprints of full 32-token
+# windows spanning >= 2 distinct docs, with the same two-level
+# (fp, doc) -> fp aggregation so the MIN-witness columns resolve
+# identically under 60-bit fp collisions.
 ORACLES["dedup_chunk_boilerplate"] = f"""
 WITH cw AS ({_CHUNK_SQL}),
 per_doc AS (
   SELECT fp, doc_id, CAST(COUNT(*) AS BIGINT) AS k,
          MIN(n_toks) AS mnt, MIN(head) AS mh, MIN(tail) AS mt
-  FROM cw GROUP BY 1, 2
+  FROM cw WHERE n_toks = 32 GROUP BY 1, 2
 )
 SELECT fp, CAST(SUM(k) AS BIGINT) AS n_occ,
        CAST(COUNT(*) AS BIGINT) AS n_docs,

@@ -20,7 +20,7 @@ Plus the driver-contract shape at sf0.001 and a DuckDB oracle parity
 check at sf0.001 (the same comparator gate as the contract run).
 """
 
-import math
+import hashlib
 import os
 
 import duckdb
@@ -114,8 +114,9 @@ def test_chunk_boilerplate_on_constructed_corpus(spark, tmp_path):
     assert hit["n_docs"] == 2 and hit["n_occ"] == 2
     assert hit["n_toks"] == 32
     assert hit["head"] == "f000" and hit["tail"] == "f031"
-    # every reported fp spans >= 2 docs by construction of the filter
-    assert all(r["n_docs"] >= 2 for r in out)
+    # every reported fp is a full window spanning >= 2 docs by
+    # construction of the filter
+    assert all(r["n_docs"] >= 2 and r["n_toks"] == W for r in out)
     # doc 2 re-uses doc 0's token SUBSEQUENCE at a different alignment:
     # none of its chunk fps may be reported (chunking is stride-aligned,
     # so only window-aligned repetition counts — the documented contract)
@@ -131,15 +132,38 @@ def test_chunk_boilerplate_on_constructed_corpus(spark, tmp_path):
     assert d3[0]["fp"] not in by_fp
 
 
+def test_chunk_boilerplate_ignores_shared_short_tail(spark, tmp_path):
+    """Two 49-token docs with distinct bodies both end in "fin": their
+    1-token tail windows (start 48) carry the same fp, but a short tail
+    is not boilerplate — only full 32-token windows are counted."""
+    rows = [
+        (0, " ".join(f"a{i:03d}" for i in range(48)) + " fin", "en"),
+        (1, " ".join(f"b{i:03d}" for i in range(48)) + " fin", "en"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    cw = entry.q_text_chunk_windows(spark, str(tmp_path)).collect()
+    tails = {r["fp"] for r in cw if r["win_id"] == 2}
+    assert len(tails) == 1 and all(
+        r["n_toks"] == 1 for r in cw if r["win_id"] == 2
+    ), "fixture: both docs end in the same 1-token tail window"
+    assert entry.q_dedup_chunk_boilerplate(spark, str(tmp_path)).collect() == []
+
+
 def test_chunk_fp_no_32bit_collision(spark, tmp_path):
     """One-token docs "c5373" and "c45389" share the 8-hex-digit md5
-    prefix f5c8b142: a 32-bit fingerprint makes them one chunk and
-    reports it as cross-doc boilerplate. The 60-bit fp keeps them
-    apart."""
+    prefix f5c8b142: a 32-bit fingerprint gives both chunks the same fp.
+    The 60-bit fp keeps them apart."""
+    assert (
+        hashlib.md5(b"c5373").hexdigest()[:8]
+        == hashlib.md5(b"c45389").hexdigest()[:8]
+    )
     rows = [(0, "c5373", "en"), (1, "c45389", "en")]
     df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
     df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-    assert entry.q_dedup_chunk_boilerplate(spark, str(tmp_path)).collect() == []
+    cw = entry.q_text_chunk_windows(spark, str(tmp_path)).collect()
+    assert len(cw) == 2
+    assert cw[0]["fp"] != cw[1]["fp"]
 
 
 def test_chunk_testdata_shape_and_oracle_parity(spark):

@@ -12,9 +12,9 @@ What is actually asserted:
 
 The executed-plan evidence that AQE's skew-split fires on a forced
 sort-merge join against this fixture lives in tools/explain_plans.py
-("skew-join torture" section of docs/PLANS.md), where the adaptive
-final plan is inspected after execution — skew=true only materializes
-at runtime, not in the static plan.
+(the "skew-join torture" check, run by tests/test_plans.py), where the
+adaptive final plan is inspected after execution — skew=true only
+materializes at runtime, not in the static plan.
 """
 
 from __future__ import annotations

@@ -1,8 +1,8 @@
 #!/usr/bin/env python
-"""Dump + sanity-check physical plans of the flagship paths.
+"""Sanity-check the physical plans of the flagship paths.
 
-Writes docs/PLANS.md with `explain("formatted")` output for each flagship
-query plus automated checks of the properties that matter at 100 TB:
+Asserts, on each flagship query's plan, the properties that matter at
+100 TB, for example:
 
 - extraction narrow path: ZERO exchanges, scan reads only (doc_id, spans)
 - extraction salted path: exactly ONE exchange (the explicit skew salt)
@@ -11,8 +11,10 @@ query plus automated checks of the properties that matter at 100 TB:
 - ANN brute-force: query side broadcast, corpus never shuffles
 - filter pushdown: predicate on the documents scan reaches PushedFilters
 
-Usage: python tools/explain_plans.py   (writes docs/PLANS.md, prints a
-check summary line per plan; exits non-zero if a check fails)
+Usage: python tools/explain_plans.py   (prints a check summary line per
+plan, and the `explain("formatted")` plan of every section with a failing
+check; exits non-zero if a check fails). ``run_checks(spark)`` runs the
+same checks in an existing session; tests/test_plans.py calls it.
 """
 
 from __future__ import annotations
@@ -37,16 +39,16 @@ def plan_of(df) -> str:
     )
 
 
-def main() -> int:
+def run_checks(spark) -> list[str]:
+    """Run every plan check in ``spark``; return the failed ones as
+    ``"<section>: <check>"`` (empty when all pass). Session conf changed
+    for a section is restored before the next one."""
     from pyspark.sql import functions as F
 
-    from extraction.job import build_session
     from extraction.pipeline import extract, run_extraction
     from extraction.schema import DOCS_SCHEMA
 
-    spark = build_session("local[4]", 8, app="explain-plans")
     failures: list[str] = []
-    sections: list[tuple[str, str, list[str]]] = []
 
     def check(name: str, plan: str, preds: dict[str, bool]):
         notes = []
@@ -54,8 +56,9 @@ def main() -> int:
             notes.append(("PASS " if ok else "FAIL ") + desc)
             if not ok:
                 failures.append(f"{name}: {desc}")
-        sections.append((name, plan, notes))
         print(f"{name}: " + "; ".join(notes))
+        if not all(preds.values()):
+            print(plan.strip())
 
     # --- extraction paths (synthetic corpus schema) ---
     docs_path = "/tmp/explain_docs"
@@ -395,11 +398,17 @@ def main() -> int:
     )
     # broadcast off: the sf0.01 tables are tiny, but the shape under test
     # is the 100-TB big-big join where broadcast is not an option
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    bj = colocated_join(spark, "xp_bkt_docs", "xp_bkt_embs", "doc_id", "vec_id")
-    bsimple = bj._jdf.queryExecution().executedPlan().toString()
-    p = plan_of(bj)
-    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    prev_threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        bj = colocated_join(spark, "xp_bkt_docs", "xp_bkt_embs", "doc_id", "vec_id")
+        bsimple = bj._jdf.queryExecution().executedPlan().toString()
+        p = plan_of(bj)
+    finally:
+        if prev_threshold is not None:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_threshold)
+        else:
+            spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     check(
         "bucketed co-located join (bucketBy(8, key) both sides at write time)",
         p,
@@ -1228,24 +1237,21 @@ def main() -> int:
         },
     )
 
-    os.makedirs(os.path.join(REPO, "docs"), exist_ok=True)
-    with open(os.path.join(REPO, "docs", "PLANS.md"), "w") as f:
-        f.write(
-            "# Physical plans of the flagship paths\n\n"
-            "Generated by `python tools/explain_plans.py` "
-            f"(sf dir: {SF_DIR}). Each section shows `explain(\"formatted\")` "
-            "plus the scale checks the plan must satisfy.\n"
-        )
-        for name, plan, notes in sections:
-            f.write(f"\n## {name}\n\n")
-            for n in notes:
-                f.write(f"- {n}\n")
-            f.write("\n```\n" + plan.strip() + "\n```\n")
-    spark.stop()
+    return failures
+
+
+def main() -> int:
+    from extraction.job import build_session
+
+    spark = build_session("local[4]", 8, app="explain-plans")
+    try:
+        failures = run_checks(spark)
+    finally:
+        spark.stop()
     if failures:
         print("FAILURES:", failures)
         return 1
-    print("ALL PLAN CHECKS PASS -> docs/PLANS.md")
+    print("ALL PLAN CHECKS PASS")
     return 0
 
 

@@ -22,7 +22,7 @@ many-heavy-docs regime and exact murmur3-inverse LPT placement in the
 few-enormous-docs regime.
 
 Corpora measured:
-  bench  — 240k docs, heavy_spans=2000 (the scaling-bench shape:
+  bench  — 240k docs, heavy_spans=2000 (bench.py's extract corpus, 2x the docs:
            12k heavy docs >> P, CLT regime)
   lumpy  — 4k docs, heavy_spans=60000 (200 enormous docs ~ P: the
            regime where uniform hashing birthday-collides)
