@@ -36,6 +36,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 TABLE_PREFIX = "table:"
+# AnalysisException conditions that mean "this sink was never written":
+# the only read failures a resume may take as a first run
+MISSING_SINK = ("PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND")
 
 
 def is_table_ref(ref: str) -> bool:
@@ -224,21 +227,27 @@ def read_increment(
     )
 
 
-def overwrite_buckets(df: DataFrame, ref: str) -> None:
-    """Commit one bucket group of output, overwriting only its buckets.
+def overwrite_buckets(df: DataFrame, ref: str, partition_col: str) -> None:
+    """Commit one group of output partitions, overwriting only those.
 
     Table branch: ``overwritePartitions`` — dynamic overwrite as a single
     atomic Iceberg snapshot (readers never see a half-written bucket;
     a crash between data and lineage re-executes the bucket into the
-    next snapshot, which is exactly the idempotent-commit contract).
-    Path branch: hive-style dynamic partition overwrite, idempotent at
-    bucket-directory granularity (requires
-    spark.sql.sources.partitionOverwriteMode=dynamic, set by the caller).
+    next snapshot, which is exactly the idempotent-commit contract); the
+    table's own partition spec applies, so ``partition_col`` is unused.
+    Path branch: hive-style parquet partitioned by ``partition_col``,
+    written in dynamic partition overwrite mode (set on this write only),
+    so it is idempotent at partition-directory granularity.
     """
     if is_table_ref(ref):
         df.writeTo(require_catalog(df.sparkSession, ref)).overwritePartitions()
     else:
-        df.write.mode("overwrite").partitionBy("partition_id").parquet(ref)
+        (
+            df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(partition_col)
+            .parquet(ref)
+        )
 
 
 def append_rows(df: DataFrame, ref: str) -> None:
@@ -252,7 +261,7 @@ def append_rows(df: DataFrame, ref: str) -> None:
 def read_back(
     spark: SparkSession, ref: str, schema: StructType | None = None
 ) -> DataFrame:
-    """Read a sink this job wrote (stats read-back, committed-bucket scan)."""
+    """Read a sink this job wrote (committed-bucket scan, job row count)."""
     if is_table_ref(ref):
         return spark.read.table(require_catalog(spark, ref))
     r = spark.read

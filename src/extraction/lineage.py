@@ -8,6 +8,14 @@ buckets) writes its output plus one lineage row per bucket; a restarted
 run anti-joins the lineage table and processes only uncommitted buckets
 (SURVEY.md §4 "resume" row, FIXTURES.md §3 schema).
 
+Lineage counts ride along on passes that already happen. One
+``groupBy(partition_id)`` pre-pass per run yields each pending bucket's
+input stats (hash range, input rows, spans in, heavy docs); an
+``Observation`` on the bucket write yields its output counts (rows, docs
+ok/empty, spans out). The driver builds a row for every bucket of the
+group, empty ones included, from those two dicts: no read-back of the
+committed files and no join.
+
 Sinks dispatch through ``catalog.py``: an output/lineage ref of the form
 ``table:cat.db.name`` commits via Iceberg ``writeTo`` (overwritePartitions
 for bucket groups — one atomic snapshot per commit — and append for
@@ -24,13 +32,14 @@ rescanning the corpus.
 
 from __future__ import annotations
 
+import datetime
 import time
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .catalog import append_rows, overwrite_buckets, read_back
+from .catalog import MISSING_SINK, append_rows, overwrite_buckets, read_back
 from .pipeline import (
     HEAVY_SPAN_THRESHOLD,
     partition_index_salts,
@@ -53,7 +62,7 @@ def committed_buckets(spark: SparkSession, lineage_path: str, run_id: str) -> se
             .collect()
         )
     except AnalysisException as e:
-        if e.getCondition() not in ("PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND"):
+        if e.getCondition() not in MISSING_SINK:
             raise
         return set()
     return {r.partition_id for r in rows}
@@ -77,7 +86,23 @@ def run_with_lineage(
     """
     done = committed_buckets(spark, lineage_path, run_id)
     docs_b = with_partition_id(docs, num_buckets)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    pending = docs_b.filter(~F.col("partition_id").isin(sorted(done))) if done else docs_b
+    # ONE input pass per run yields every pending bucket's lineage input
+    # stats and the heavy-tier row counts that gate the skew-aware
+    # repartition of each group
+    nspans = F.size("spans")
+    in_stats = {
+        r.partition_id: r.asDict()
+        for r in pending.groupBy("partition_id")
+        .agg(
+            F.min(F.xxhash64("doc_id")).alias("min_hash"),
+            F.max(F.xxhash64("doc_id")).alias("max_hash"),
+            F.count("*").alias("input_rows"),
+            F.sum(nspans).alias("spans_in"),
+            F.count_if(nspans > HEAVY_SPAN_THRESHOLD).alias("heavy_docs"),
+        )
+        .collect()
+    }
 
     commits = 0
     for lo in range(0, num_buckets, buckets_per_commit):
@@ -86,29 +111,10 @@ def run_with_lineage(
         if not todo:
             continue
         t0 = time.monotonic()
-        chunk = docs_b.filter(F.col("partition_id").isin(todo))
-        # ONE input pass yields both the per-bucket lineage input stats
-        # and the heavy-tier row count that gates the skew-aware
-        # repartition — the skew measuring scan comes for free
-        nspans = F.size("spans")
-        in_stats = (
-            chunk.groupBy("partition_id")
-            .agg(
-                F.min(F.xxhash64("doc_id")).alias("min_hash"),
-                F.max(F.xxhash64("doc_id")).alias("max_hash"),
-                F.count("*").alias("input_rows"),
-                F.sum(nspans).alias("spans_in"),
-                F.sum(
-                    F.when(nspans > HEAVY_SPAN_THRESHOLD, 1).otherwise(0)
-                ).alias("heavy_docs"),
-            )
-            .collect()
-        )
-        heavy_docs = sum(r.heavy_docs or 0 for r in in_stats)
         extracted = run_extraction(
-            chunk.select("doc_id", "spans"),
+            docs_b.filter(F.col("partition_id").isin(todo)).select("doc_id", "spans"),
             num_partitions=num_partitions,
-            heavy_docs_hint=heavy_docs,
+            heavy_docs_hint=sum(in_stats.get(b, {}).get("heavy_docs", 0) for b in todo),
         )
         # cluster the output on the bucket key before the hive-partitioned
         # write: without this every kernel task writes a file into every
@@ -118,9 +124,6 @@ def run_with_lineage(
         # shuffle of the (smaller) extracted output buys one file per
         # bucket and O(buckets) commit work: the standard bucketed-table
         # write discipline at scale.
-        # n_spans is materialized as a flat column so the post-commit
-        # stats pass scans two int columns instead of re-decoding the
-        # nested spans arrays (measured 14 s -> ~1 s on the bench corpus)
         # repartition(k, partition_id) with k distinct bucket values
         # hash-COLLIDES (some tasks write 2-3 buckets, others idle —
         # the same defect tools/skew_balance.py measured on the kernel
@@ -134,75 +137,48 @@ def run_with_lineage(
                 for x in (F.lit(b), F.lit(int(wsalts[i])))
             ]
         )
-        out = (
+        routed = (
             with_partition_id(extracted, num_buckets)
-            .withColumn("n_spans", F.size("spans"))
             .withColumn("__wsalt", bucket_salt[F.col("partition_id")])
             .repartition(max(1, len(todo)), F.col("__wsalt"))
             .drop("__wsalt")
         )
+        # the output counts are observed AFTER the routing shuffle, in the
+        # write's result stage: Spark applies each successful task's
+        # metric update once, and the write itself is the only pass
+        pid, n = F.col("partition_id"), F.size("spans")
+        counts = {"output_rows": F.lit(True), "docs_ok": n > 0, "docs_empty": n == 0}
+        obs = Observation()
+        out = routed.observe(
+            obs,
+            *[F.count_if((pid == b) & c).alias(f"{k}_{b}") for b in todo for k, c in counts.items()],
+            *[F.sum(F.when(pid == b, n)).alias(f"spans_out_{b}") for b in todo],
+        )
         # data first, lineage second: a crash between the two re-executes
-        # the bucket (dynamic overwrite of the same subdirs — idempotent)
-        overwrite_buckets(out, output_path)
-        # stats read back from the COMMITTED files (partition-pruned,
-        # column-pruned scan), never from the lazy plan — re-deriving
-        # `out` would re-run extraction
-        written = (
-            read_back(spark, output_path)
-            .select("partition_id", "n_spans")
-            .filter(F.col("partition_id").isin(todo))
-        )
-        _commit_lineage(
-            spark, in_stats, written, lineage_path, run_id, snapshot_id,
-            wall_ms=int((time.monotonic() - t0) * 1000),
-        )
+        # the bucket (dynamic overwrite of the same subdirs — idempotent),
+        # and a failed write raises before the observation is read
+        overwrite_buckets(out, output_path, "partition_id")
+        got = obs.get
+        row = {
+            "run_id": run_id,
+            "snapshot_id": snapshot_id,
+            "wall_ms": int((time.monotonic() - t0) * 1000),
+            "committed_at": datetime.datetime.now(datetime.timezone.utc),
+        }
+        rows = []
+        for b in todo:
+            s = in_stats.get(b, {})
+            row.update(
+                partition_id=b,
+                min_hash=s.get("min_hash"),
+                max_hash=s.get("max_hash"),
+                input_rows=s.get("input_rows", 0),
+                spans_in=s.get("spans_in") or 0,
+                **{k: got.get(f"{k}_{b}") or 0 for k in (*counts, "spans_out")},
+            )
+            rows.append(tuple(row[f.name] for f in LINEAGE_SCHEMA.fields))
+        append_rows(spark.createDataFrame(rows, LINEAGE_SCHEMA), lineage_path)
         done.update(todo)
         commits += 1
         if fail_after_commits is not None and commits >= fail_after_commits:
             raise RuntimeError(f"injected failure after {commits} commits")
-
-
-def _commit_lineage(
-    spark: SparkSession,
-    in_stats_rows: list,
-    out: DataFrame,
-    lineage_path: str,
-    run_id: str,
-    snapshot_id: int,
-    wall_ms: int,
-) -> None:
-    in_stats = spark.createDataFrame(
-        [
-            (r.partition_id, r.min_hash, r.max_hash, r.input_rows, r.spans_in)
-            for r in in_stats_rows
-        ],
-        "partition_id int, min_hash long, max_hash long, input_rows long, spans_in long",
-    )
-    out_stats = (
-        out.groupBy("partition_id")
-        .agg(
-            F.count("*").alias("output_rows"),
-            F.sum((F.col("n_spans") > 0).cast("long")).alias("docs_ok"),
-            F.sum((F.col("n_spans") == 0).cast("long")).alias("docs_empty"),
-            F.sum("n_spans").alias("spans_out"),
-        )
-    )
-    lineage = (
-        in_stats.join(out_stats, "partition_id", "left")
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(snapshot_id).cast("long").alias("snapshot_id"),
-            F.col("partition_id"),
-            "min_hash",
-            "max_hash",
-            "input_rows",
-            F.coalesce("output_rows", F.lit(0)).alias("output_rows"),
-            F.coalesce("docs_ok", F.lit(0)).alias("docs_ok"),
-            F.coalesce("docs_empty", F.lit(0)).alias("docs_empty"),
-            F.coalesce("spans_in", F.lit(0)).alias("spans_in"),
-            F.coalesce("spans_out", F.lit(0)).alias("spans_out"),
-            F.lit(wall_ms).cast("long").alias("wall_ms"),
-            F.current_timestamp().alias("committed_at"),
-        )
-    )
-    append_rows(lineage, lineage_path)

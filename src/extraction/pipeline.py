@@ -129,8 +129,8 @@ def repartition_packed(
     from table statistics.
 
     ``heavy_docs_hint``: caller-known heavy-tier row count (lineage
-    computes it in its per-chunk stats pass); >= 4*P skips the guard
-    scan entirely.
+    sums it per group from its per-run input stats pass); >= 4*P skips
+    the guard scan entirely.
     """
     P = num_partitions
     if P < 2:

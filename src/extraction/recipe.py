@@ -19,6 +19,7 @@ for the ordered sink: src/HelperMethods.py:142-157.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -135,7 +136,7 @@ def run_recipe_sink(
     shipped corpus and its dataset card cannot disagree — including
     across crash-reruns.
     """
-    from extraction.catalog import append_rows, is_table_ref, read_back
+    from extraction.catalog import MISSING_SINK, append_rows, overwrite_buckets, read_back
 
     try:
         already = (
@@ -143,7 +144,9 @@ def run_recipe_sink(
             .filter(F.col("run_id") == run_id)
             .head(1)
         )
-    except Exception:  # first run: lineage table does not exist yet
+    except AnalysisException as e:  # first run: no lineage written yet
+        if e.getCondition() not in MISSING_SINK:
+            raise
         already = []
     if already:
         return {"docs_in": 0, "docs_kept": 0, "skipped": True}
@@ -157,17 +160,7 @@ def run_recipe_sink(
         staged.filter(F.col("stage") == "kept").select("doc_id"),
         "doc_id",
     ).withColumn("run_id", F.lit(run_id))
-    if is_table_ref(output_ref):
-        from extraction.catalog import require_catalog
-
-        survivors.writeTo(
-            require_catalog(spark, output_ref)
-        ).overwritePartitions()
-    else:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        survivors.write.mode("overwrite").partitionBy("run_id").parquet(
-            output_ref
-        )
+    overwrite_buckets(survivors, output_ref, "run_id")
     attribution = (
         staged.groupBy("lang", "stage")
         .agg(

@@ -5,10 +5,12 @@ import os
 
 import pytest
 from py4j.protocol import Py4JJavaError
+from pyspark.sql import functions as F
 
 from extraction.corpus import gen_corpus
 from extraction.lineage import committed_buckets, run_with_lineage
 from extraction.oracle import extract_corpus
+from extraction.pipeline import with_partition_id
 from extraction.schema import DOCS_SCHEMA
 
 N_DOCS = 120
@@ -29,10 +31,10 @@ def read_result(spark, path):
     }
 
 
-def golden():
+def golden(n=N_DOCS):
     return {
         d: [(s["kind"], s["text"], s["media_ref"], s["order"]) for s in v]
-        for d, v in extract_corpus(gen_corpus(N_DOCS, heavy_spans=100)).items()
+        for d, v in extract_corpus(gen_corpus(n, heavy_spans=100)).items()
     }
 
 
@@ -101,3 +103,93 @@ def test_unreadable_lineage_raises_instead_of_recommitting(spark, docs, tmp_path
         run_with_lineage(spark, docs, out, lin, "run-d", num_buckets=BUCKETS,
                          buckets_per_commit=PER_COMMIT)
     assert lineage_files() == parts  # no lineage rows appended
+
+
+def test_sparse_input_commits_every_bucket(spark, tmp_path):
+    """3 docs over 8 buckets land in buckets 3, 4 and 5, so the first
+    commit group {0, 1} writes no output at all. Every bucket still
+    commits, empty ones included, and a rerun is a no-op."""
+    sparse = spark.createDataFrame(gen_corpus(3, heavy_spans=100), schema=DOCS_SCHEMA)
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lineage")
+    run_with_lineage(spark, sparse, out, lin, "run-s", num_buckets=BUCKETS,
+                     buckets_per_commit=PER_COMMIT)
+    assert committed_buckets(spark, lin, "run-s") == set(range(BUCKETS))
+    assert read_result(spark, out) == golden(3)
+    lrows = spark.read.parquet(lin).collect()
+    assert len(lrows) == BUCKETS
+    empty = [r for r in lrows if r.input_rows == 0]
+    assert empty and all(
+        r.output_rows == r.spans_in == r.spans_out == 0 and r.min_hash is None
+        for r in empty
+    )
+
+    run_with_lineage(spark, sparse, out, lin, "run-s", num_buckets=BUCKETS,
+                     buckets_per_commit=PER_COMMIT)
+    assert spark.read.parquet(lin).count() == BUCKETS  # no row appended
+
+
+def test_sparse_input_lineage_row_per_bucket(spark, tmp_path):
+    sparse = spark.createDataFrame(gen_corpus(40, heavy_spans=100), schema=DOCS_SCHEMA)
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lineage")
+    run_with_lineage(spark, sparse, out, lin, "run-t", num_buckets=64,
+                     buckets_per_commit=16)
+    lrows = spark.read.parquet(lin).collect()
+    assert sorted(r.partition_id for r in lrows) == list(range(64))
+    assert sum(r.input_rows for r in lrows) == sum(r.output_rows for r in lrows) == 40
+
+
+def test_lineage_rows_equal_per_bucket_aggregates(spark, docs, tmp_path):
+    """Each bucket's lineage row, from the first run and from the resume
+    alike, equals a groupBy over the committed output and over the
+    bucketed input."""
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lineage")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_with_lineage(spark, docs, out, lin, "run-e", num_buckets=BUCKETS,
+                         buckets_per_commit=PER_COMMIT, fail_after_commits=2)
+    run_with_lineage(spark, docs, out, lin, "run-e", num_buckets=BUCKETS,
+                     buckets_per_commit=PER_COMMIT)
+
+    def by_bucket(df, *aggs):
+        return {r.partition_id: r.asDict() for r in df.groupBy("partition_id").agg(*aggs).collect()}
+
+    n = F.size("spans")
+    got_out = by_bucket(
+        spark.read.parquet(out),
+        F.count("*").alias("output_rows"),
+        F.count_if(n > 0).alias("docs_ok"),
+        F.count_if(n == 0).alias("docs_empty"),
+        F.sum(n).alias("spans_out"),
+    )
+    got_in = by_bucket(
+        with_partition_id(docs, BUCKETS),
+        F.count("*").alias("input_rows"),
+        F.sum(n).alias("spans_in"),
+        F.min(F.xxhash64("doc_id")).alias("min_hash"),
+        F.max(F.xxhash64("doc_id")).alias("max_hash"),
+    )
+    lrows = {r.partition_id: r.asDict() for r in spark.read.parquet(lin).collect()}
+    assert sorted(lrows) == list(range(BUCKETS))
+    assert sorted(got_out) == sorted(got_in) == list(range(BUCKETS))
+    for b, row in lrows.items():
+        for want in (got_out[b], got_in[b]):
+            assert {k: row[k] for k in want} == want, b
+
+
+def test_run_leaves_session_overwrite_mode_alone(spark, docs, tmp_path):
+    """The bucket write sets dynamic overwrite on itself. Under a static
+    session a crash and resume still keeps the committed buckets, and
+    the session conf is as the caller left it."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        out, lin = str(tmp_path / "out"), str(tmp_path / "lineage")
+        with pytest.raises(RuntimeError, match="injected failure"):
+            run_with_lineage(spark, docs, out, lin, "run-f", num_buckets=BUCKETS,
+                             buckets_per_commit=PER_COMMIT, fail_after_commits=2)
+        run_with_lineage(spark, docs, out, lin, "run-f", num_buckets=BUCKETS,
+                         buckets_per_commit=PER_COMMIT)
+        assert spark.conf.get(key) == "STATIC"
+        assert read_result(spark, out) == golden()
+    finally:
+        spark.conf.set(key, before)

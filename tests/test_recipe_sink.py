@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from extraction.recipe import STAGES, recipe_card, recipe_staged, run_recipe_sink
@@ -97,3 +99,28 @@ def test_recipe_sink_rerun_is_idempotent(spark, tmp_path):
     assert spark.read.parquet(out_ref).count() == n_rows
     lin_rows = spark.read.parquet(lin2).filter(F.col("run_id") == "r1")
     assert lin_rows.agg(F.sum("n_docs")).collect()[0][0] == docs.count()
+
+
+def test_recipe_sink_unreadable_lineage_raises(spark, tmp_path):
+    """A lineage that exists but cannot be read must stop the rerun.
+    Reading it as "first run" would re-ship the run and append its
+    attribution a second time."""
+    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+    out_ref = str(tmp_path / "cleaned")
+    lin_ref = str(tmp_path / "lineage")
+    run_recipe_sink(spark, docs, out_ref, lin_ref, "r1")
+
+    def lineage_files():
+        return sorted(
+            os.path.join(d, f)
+            for d, _, fs in os.walk(lin_ref) for f in fs if f.endswith(".parquet")
+        )
+
+    parts = lineage_files()
+    assert parts
+    for p in parts:  # cut every part file in half: footer gone
+        with open(p, "r+b") as f:
+            f.truncate(os.path.getsize(p) // 2)
+    with pytest.raises(Py4JJavaError):  # the footer read fails in a task
+        run_recipe_sink(spark, docs, out_ref, lin_ref, "r1")
+    assert lineage_files() == parts  # no lineage rows appended
