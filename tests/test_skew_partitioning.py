@@ -8,6 +8,9 @@ routes through ``partition_index_salts`` (murmur3-inverse values that
 land on exact physical partition indices) and LPT bin packing.
 """
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from extraction.corpus import corpus_df
@@ -17,6 +20,42 @@ from extraction.pipeline import (
     repartition_packed,
     run_extraction,
 )
+from extraction.schema import DOCS_SCHEMA
+
+
+def _parquet(spark, docs, path, files):
+    """Write ``docs`` as exactly ``files`` parquet files and read it back."""
+    docs.coalesce(files).write.parquet(path)
+    written = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    assert len(written) == files, written
+    return spark.read.schema(DOCS_SCHEMA).parquet(path)
+
+
+@pytest.fixture(scope="module")
+def light_inputs(spark, tmp_path_factory):
+    """No heavy docs: (spread 8-file input, under-split 1-file input)."""
+    root = tmp_path_factory.mktemp("light")
+    docs = corpus_df(spark, 2000, heavy_spans=200, slices=8)
+    spread = _parquet(spark, docs, str(root / "spread"), 8)
+    single = _parquet(spark, docs, str(root / "single"), 1)
+    assert spread.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+    assert single.rdd.getNumPartitions() == 1
+    return spread, single
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _new_jobs(spark, fn):
+    """Ids of the Spark jobs ``fn()`` launches."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup())
+    fn()
+    bus.waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup()) - before
 
 
 def _mass_per_partition(df, p):
@@ -66,32 +105,68 @@ def test_packed_balances_enormous_docs(spark):
     docs.unpersist()
 
 
-def test_packed_clt_fallback_is_uniform(spark):
+def test_packed_clt_fallback_is_uniform(spark, light_inputs):
     """Many heavy docs (>= 4P): packing can't beat uniform hashing (CLT)
-    and must return the identical uniform plan — no collect, no join."""
+    — no collect, no join. A spread scan is kept as is (its byte splits
+    balance mass like the hash does); an under-split one gets the
+    uniform hash repartition."""
     p = 4
-    docs = corpus_df(spark, 2000, heavy_spans=200, slices=8)
-    packed = repartition_packed(docs, p, heavy_docs_hint=4 * p)
-    plan = packed._jdf.queryExecution().executedPlan().toString()
+    spread, single = light_inputs
+    plan = _plan(repartition_packed(spread, p, heavy_docs_hint=4 * p))
+    assert plan.count("Exchange") == 0, plan
+    assert "BroadcastHashJoin" not in plan
+    plan = _plan(repartition_packed(single, p, heavy_docs_hint=4 * p))
+    assert plan.count("Exchange") == 1, plan
     assert "xxhash64(doc_id" in plan
     assert "BroadcastHashJoin" not in plan
 
 
-def test_packed_extraction_content_identical(spark):
+def test_no_heavy_tier_shuffles_only_an_under_split_scan(spark, light_inputs):
+    """No heavy tier to place: a scan with a partition per core runs the
+    kernel on its own splits, with no shuffle; a scan with fewer
+    partitions than cores is hash-spread into P."""
+    spread, single = light_inputs
+    out = repartition_packed(spread, 8)
+    assert _plan(out).count("Exchange") == 0, _plan(out)
+    assert out.rdd.getNumPartitions() == spread.rdd.getNumPartitions()
+    out = repartition_packed(single, 8)
+    assert _plan(out).count("Exchange") == 1, _plan(out)
+    assert out.rdd.getNumPartitions() == 8
+
+
+def test_zero_heavy_hint_launches_no_job(spark, light_inputs):
+    """heavy_docs_hint=0 skips the guard scan, and telling a spread scan
+    from an under-split one is planning only. An input with an exchange
+    of its own (an adaptive plan, e.g. read_increment's join) would run
+    that exchange to report its partition count, so it counts as not
+    spread without asking."""
+    spread, single = light_inputs
+    for docs in (spread, single, spread.repartition(8)):
+        assert _new_jobs(spark, lambda: repartition_packed(docs, 8, heavy_docs_hint=0)) == set()
+    # the probe sees a job when there is one: without a hint the guard
+    # scan runs
+    assert _new_jobs(spark, lambda: repartition_packed(spread, 8))
+
+
+def test_packed_extraction_content_identical(spark, tmp_path):
     """Partitioning must never change extraction results: packed,
-    uniform and single-partition runs are row-set identical."""
-    docs = corpus_df(spark, 300, heavy_spans=5000, slices=8).cache()
-    base = sorted(
-        (r.doc_id, tuple(sorted((s.order, s.kind, s.text, s.media_ref) for s in r.spans)))
-        for r in run_extraction(docs, num_partitions=None).collect()
-    )
-    for kwargs in (
-        {"num_partitions": 8},
-        {"num_partitions": 8, "heavy_docs_hint": 10**6},
-    ):
-        got = sorted(
+    uniform and narrow runs are row-set identical, on a spread and on a
+    1-file scan."""
+    docs = corpus_df(spark, 300, heavy_spans=5000, slices=8)
+    spread = _parquet(spark, docs, str(tmp_path / "spread"), 8)
+    single = _parquet(spark, docs, str(tmp_path / "single"), 1)
+
+    def rows(out):
+        return sorted(
             (r.doc_id, tuple(sorted((s.order, s.kind, s.text, s.media_ref) for s in r.spans)))
-            for r in run_extraction(docs, **kwargs).collect()
+            for r in out.collect()
         )
-        assert got == base, kwargs
-    docs.unpersist()
+
+    base = rows(run_extraction(spread, num_partitions=None))
+    for docs in (spread, single):
+        for kwargs in (
+            {"num_partitions": 8},
+            {"num_partitions": 8, "heavy_docs_hint": 10**6},
+            {"num_partitions": 8, "heavy_docs_hint": 0},
+        ):
+            assert rows(run_extraction(docs, **kwargs)) == base, kwargs

@@ -5,7 +5,8 @@ Asserts, on each flagship query's plan, the properties that matter at
 100 TB, for example:
 
 - extraction narrow path: ZERO exchanges, scan reads only (doc_id, spans)
-- extraction salted path: exactly ONE exchange (the explicit skew salt)
+- extraction skew-aware path: ZERO exchanges on a spread scan with no
+  heavy docs, exactly ONE on an under-split scan or with LPT placement
 - LSH-verified dedup: candidate side broadcast (no corpus-text shuffle
   for verification)
 - ANN brute-force: query side broadcast, corpus never shuffles
@@ -61,14 +62,19 @@ def run_checks(spark) -> list[str]:
             print(plan.strip())
 
     # --- extraction paths (synthetic corpus schema) ---
-    docs_path = "/tmp/explain_docs"
-    if not os.path.exists(os.path.join(docs_path, "_SUCCESS")):
-        from extraction.corpus import corpus_df
+    # each fixture has a set file count: 8 files scan as one partition
+    # per core or more (spread), 1 file as a single partition
+    from extraction.corpus import corpus_df
 
-        corpus_df(spark, 200, heavy_spans=50, slices=2).write.mode(
-            "overwrite"
-        ).parquet(docs_path)
-    docs = spark.read.schema(DOCS_SCHEMA).parquet(docs_path)
+    def fixture(files: int):
+        path = f"/tmp/explain_docs_{files}file"
+        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+            corpus_df(spark, 200, heavy_spans=50, slices=8).coalesce(
+                files
+            ).write.mode("overwrite").parquet(path)
+        return spark.read.schema(DOCS_SCHEMA).parquet(path)
+
+    docs = fixture(8)
 
     p = plan_of(extract(docs))
     check(
@@ -80,24 +86,37 @@ def run_checks(spark) -> list[str]:
         },
     )
 
-    balanced = run_extraction(docs, num_partitions=8)
     # formatted output lists every operator twice (tree + detail section);
     # count exchanges on the simple plan string instead
+    spread = run_extraction(docs, num_partitions=8)
+    simple = spread._jdf.queryExecution().executedPlan().toString()
+    check(
+        "extract skew-aware, no heavy tier, spread scan (read -> mapInArrow)",
+        plan_of(spread),
+        {
+            "scan is spread": docs.rdd.getNumPartitions()
+            >= spark.sparkContext.defaultParallelism,
+            "zero exchanges": "Exchange" not in simple,
+            "no placement join": "BroadcastHashJoin" not in simple,
+        },
+    )
+
+    under = fixture(1)
+    balanced = run_extraction(under, num_partitions=8)
     simple = balanced._jdf.queryExecution().executedPlan().toString()
     check(
-        "extract skew-aware, uniform branch (read -> repartition -> mapInArrow)",
+        "extract skew-aware, under-split scan (read -> repartition -> mapInArrow)",
         plan_of(balanced),
         {
+            "scan is one partition": under.rdd.getNumPartitions() == 1,
             "exactly one exchange": simple.count("Exchange") == 1,
-            "no placement join (CLT fallback)": "BroadcastHashJoin" not in simple,
+            "no placement join (uniform hash)": "BroadcastHashJoin" not in simple,
         },
     )
 
     # packed branch: enormous docs ~ P (BENCH/SKEW.md) — exact LPT
     # placement adds ONE broadcast (the tiny doc_id -> salt map) and
     # still exactly one shuffle
-    from extraction.corpus import corpus_df
-
     lumpy = corpus_df(spark, 400, heavy_spans=20000, slices=2)
     packed = run_extraction(lumpy, num_partitions=8)
     psimple = packed._jdf.queryExecution().executedPlan().toString()
