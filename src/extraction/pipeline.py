@@ -5,17 +5,18 @@ docs; SURVEY.md §4):
 
 - Extraction is embarrassingly parallel: one row = one complete document,
   so the kernel runs as a NARROW mapInArrow — zero shuffles on the hot
-  path. The skew repartition below shuffles only when it has heavy docs
-  to place, or when the scan has fewer partitions than there are cores.
+  path. The skew repartition below shuffles only when there are heavy
+  docs, or when the input is not a spread file scan (``is_spread``).
 - Column pruning: we select exactly (doc_id, spans) so the scan reads
   only those columns (reference loads whole images unconditionally,
   src/DocumentAnalyzer.py:105-109 — Iceberg/parquet pruning is free here).
 - Skew (FIXTURES.md "media-heavy" family): measured, plain uniform
   xxhash64(doc_id) partitioning is near-optimally mass-balanced whenever
-  heavy docs outnumber partitions (BENCH/skew_balance.json), and so are
-  the scan's byte splits, which ``repartition_packed`` keeps unshuffled.
-  The one regime both lose — few enormous docs colliding into one
-  partition — is handled by ``repartition_packed``: exact LPT bin
+  heavy docs outnumber partitions (BENCH/skew_balance.json). With no
+  heavy docs at all, a spread file scan's byte splits balance as well,
+  and ``repartition_packed`` keeps them unshuffled. The one regime
+  hashing loses — few enormous docs colliding into one partition — is
+  handled by ``repartition_packed``: exact LPT bin
   packing with murmur3-inverse salts (a coarse salt under
   ``repartition(P, salt)`` hash-collides; see partition_index_salts).
   Within the kernel, SPAN_BUDGET (segment.py) bounds peak memory.
@@ -96,19 +97,28 @@ def partition_index_salts(spark, num_partitions: int) -> list[int]:
         n *= 4  # astronomically unlikely at 64x coverage
 
 
-def is_spread(docs: DataFrame) -> bool:
-    """True when the scan already gives every core a task.
+def is_spread(docs: DataFrame, num_partitions: int) -> bool:
+    """True when the file scan gives every core a task with rows, and
+    makes no more than ``num_partitions`` tasks (the kernel partition
+    count the caller asked for).
 
-    Planning only: a plan without an exchange builds its RDD lazily, so
-    the partition count launches no Spark job. An adaptive plan (one
-    with an exchange) would run its stages to learn its final partition
-    count, so it never counts as spread.
+    Both counts are known at planning time, so this launches no Spark
+    job. The file count matters as well as the split count: a big file
+    is cut into several splits, but the parquet reader gives each row
+    group to one split only, so a file of few row groups leaves most of
+    its splits empty. An input that is not a file scan, or has fewer
+    files than cores, is not spread. An adaptive plan (one with an
+    exchange) would run its stages to learn its final partition count,
+    so it never counts as spread.
     """
     plan = docs._jdf.queryExecution().executedPlan()
     if plan.nodeName() == "AdaptiveSparkPlan":
         return False
     parallelism = docs.sparkSession.sparkContext.defaultParallelism
-    return docs.rdd.getNumPartitions() >= parallelism
+    # the JVM array's length, without copying every path to python
+    if len(docs._jdf.inputFiles()) < parallelism:
+        return False
+    return parallelism <= docs.rdd.getNumPartitions() <= num_partitions
 
 
 def repartition_packed(
@@ -127,9 +137,7 @@ def repartition_packed(
       corpus (12k heavy docs). No stateless salt can beat it — any
       injective salt IS uniform hashing, any coarser salt only loses
       information (and a salt with exactly P values hash-collides into
-      empty partitions; see partition_index_salts). Byte-sized scan
-      splits balance span mass the same way: on text_extract the scan
-      reads skew 1.03, the hash shuffle 1.11.
+      empty partitions; see partition_index_salts).
     - The one regime uniform hashing genuinely loses is FEW ENORMOUS
       docs (heavy count ~ P): two 10^6-span docs land in the same
       partition with birthday probability, and that partition is the
@@ -138,10 +146,12 @@ def repartition_packed(
 
     The kernel works per doc, so every outcome gives identical output:
 
-    - no heavy tier to place (no heavy docs, or more than the guard of
-      max(4*P, 1024)): the input itself when it is spread
-      (``is_spread``: at least one scan partition per core; no shuffle
-      at all), else the uniform hash repartition into P partitions;
+    - no heavy docs: the input itself when it is spread (``is_spread``;
+      no shuffle at all: on text_extract the scan's byte splits read
+      span-mass skew 1.03, the hash shuffle 1.11), else the uniform
+      hash repartition into P partitions;
+    - many heavy docs (more than the guard of max(4*P, 1024)): the
+      uniform hash repartition into P partitions, as measured above;
     - a few heavy docs: collect the heavy (doc_id, mass) rows, pack them
       longest-processing-time-first onto the least-loaded partition and
       route each to its exact physical partition via the murmur3-inverse
@@ -155,26 +165,30 @@ def repartition_packed(
     the guard skips the guard scan entirely.
     """
     P = num_partitions
+    uniform = docs.repartition(max(1, P), F.xxhash64("doc_id"))
     if P < 2:
-        return docs.repartition(max(1, P), F.xxhash64("doc_id"))
-    base = docs if is_spread(docs) else docs.repartition(P, F.xxhash64("doc_id"))
+        return uniform
     guard = max(4 * P, 1024)
-    if heavy_docs_hint is not None and (
-        heavy_docs_hint == 0 or heavy_docs_hint >= guard
-    ):
-        return base
-    # the size of one leaf field is the span count, and lets the guard
-    # scan read only spans.kind instead of whole spans (text_extract's
-    # 24k docs on a 4-vCPU VM: 0.12 s instead of 0.23 s)
-    nspans = F.size(F.col("spans.kind"))
-    heavy_rows = (
-        docs.filter(nspans > heavy_span_threshold)
-        .select(F.col("doc_id"), nspans.alias("mass"))
-        .limit(guard + 1)
-        .collect()
-    )
-    if not heavy_rows or len(heavy_rows) > guard:
-        return base
+    if heavy_docs_hint is not None and heavy_docs_hint >= guard:
+        return uniform
+    if heavy_docs_hint == 0:
+        heavy_rows = []
+    else:
+        # the size of one leaf field is the span count, and lets the
+        # guard scan read only spans.kind instead of whole spans
+        # (text_extract's 24k docs on a 4-vCPU VM: 0.12 s instead of
+        # 0.23 s)
+        nspans = F.size(F.col("spans.kind"))
+        heavy_rows = (
+            docs.filter(nspans > heavy_span_threshold)
+            .select(F.col("doc_id"), nspans.alias("mass"))
+            .limit(guard + 1)
+            .collect()
+        )
+    if not heavy_rows:
+        return docs if is_spread(docs, P) else uniform
+    if len(heavy_rows) > guard:
+        return uniform
     spark = docs.sparkSession
     salts = partition_index_salts(spark, P)
     # LPT greedy bin packing: heaviest doc first onto the least-loaded

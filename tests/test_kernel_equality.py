@@ -6,7 +6,7 @@ import pytest
 
 from extraction.corpus import gen_corpus
 from extraction.oracle import extract_corpus
-from extraction.pipeline import extract, run_extraction
+from extraction.pipeline import extract, is_spread, run_extraction
 from extraction.schema import DOCS_SCHEMA
 
 N_DOCS = 400  # ≥4 of each FIXTURES.md family
@@ -85,7 +85,7 @@ def test_plan_shape(spark, corpus, tmp_path):
     path = str(tmp_path / "docs")
     spark.createDataFrame(corpus[:20], schema=DOCS_SCHEMA).write.parquet(path)
     docs = spark.read.schema(DOCS_SCHEMA).parquet(path)
-    assert docs.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+    assert is_spread(docs, 8)
 
     narrow = extract(docs)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in narrow, f"narrow path gained a shuffle:\n{narrow}"

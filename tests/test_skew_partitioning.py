@@ -9,6 +9,7 @@ land on exact physical partition indices) and LPT bin packing.
 """
 
 import os
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -106,19 +107,23 @@ def test_packed_balances_enormous_docs(spark):
 
 
 def test_packed_clt_fallback_is_uniform(spark, light_inputs):
-    """Many heavy docs (>= 4P): packing can't beat uniform hashing (CLT)
-    — no collect, no join. A spread scan is kept as is (its byte splits
-    balance mass like the hash does); an under-split one gets the
-    uniform hash repartition."""
+    """Many heavy docs (at least the guard, max(4P, 1024)): packing can't
+    beat uniform hashing (CLT) and must return the identical uniform
+    plan — no join — on a spread scan as on an under-split one, whether
+    the hint says so or the guard scan overflows."""
     p = 4
+    guard = max(4 * p, 1024)
     spread, single = light_inputs
-    plan = _plan(repartition_packed(spread, p, heavy_docs_hint=4 * p))
-    assert plan.count("Exchange") == 0, plan
-    assert "BroadcastHashJoin" not in plan
-    plan = _plan(repartition_packed(single, p, heavy_docs_hint=4 * p))
-    assert plan.count("Exchange") == 1, plan
-    assert "xxhash64(doc_id" in plan
-    assert "BroadcastHashJoin" not in plan
+    for docs in (spread, single):
+        for packed in (
+            repartition_packed(docs, p, heavy_docs_hint=guard),
+            # every doc counts as heavy: the guard scan overflows
+            repartition_packed(docs, p, heavy_span_threshold=0),
+        ):
+            plan = _plan(packed)
+            assert plan.count("Exchange") == 1, plan
+            assert "xxhash64(doc_id" in plan
+            assert "BroadcastHashJoin" not in plan
 
 
 def test_no_heavy_tier_shuffles_only_an_under_split_scan(spark, light_inputs):
@@ -132,6 +137,39 @@ def test_no_heavy_tier_shuffles_only_an_under_split_scan(spark, light_inputs):
     out = repartition_packed(single, 8)
     assert _plan(out).count("Exchange") == 1, _plan(out)
     assert out.rdd.getNumPartitions() == 8
+
+
+def test_byte_splits_alone_are_not_spread(spark, light_inputs):
+    """A scan counts as spread only with a file per core and at most P
+    splits. A 1-file input cut into a split per core still has its rows
+    in the one split that owns its row group, and a spread input cut
+    into more than P splits would run the kernel on more than P
+    partitions: both get the uniform hash into P."""
+    spread, single = light_inputs
+    parallelism = spark.sparkContext.defaultParallelism
+    one_file = max(os.path.getsize(urlparse(f).path) for f in single.inputFiles())
+    per_file = max(os.path.getsize(urlparse(f).path) for f in spread.inputFiles())
+    try:
+        # six splits of the 1-file input, three of each spread file
+        for files, split, lo, hi in (
+            (single.inputFiles(), one_file // 6 + 1, parallelism, 8),
+            (spread.inputFiles(), per_file // 3 + 1, 9, None),
+        ):
+            spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
+            docs = spark.read.schema(DOCS_SCHEMA).parquet(*files)
+            n = docs.rdd.getNumPartitions()
+            assert n >= lo and (hi is None or n <= hi), n
+            out = repartition_packed(docs, 8)
+            assert _plan(out).count("Exchange") == 1, _plan(out)
+            assert out.rdd.getNumPartitions() == 8
+            filled = out.groupBy(F.spark_partition_id()).count().count()
+            assert filled == 8
+        # the split 1-file scan on its own leaves cores without rows
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(one_file // 6 + 1))
+        docs = spark.read.schema(DOCS_SCHEMA).parquet(*single.inputFiles())
+        assert docs.groupBy(F.spark_partition_id()).count().count() < parallelism
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
 
 
 def test_zero_heavy_hint_launches_no_job(spark, light_inputs):

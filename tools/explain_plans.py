@@ -46,7 +46,7 @@ def run_checks(spark) -> list[str]:
     for a section is restored before the next one."""
     from pyspark.sql import functions as F
 
-    from extraction.pipeline import extract, run_extraction
+    from extraction.pipeline import extract, is_spread, run_extraction
     from extraction.schema import DOCS_SCHEMA
 
     failures: list[str] = []
@@ -62,8 +62,8 @@ def run_checks(spark) -> list[str]:
             print(plan.strip())
 
     # --- extraction paths (synthetic corpus schema) ---
-    # each fixture has a set file count: 8 files scan as one partition
-    # per core or more (spread), 1 file as a single partition
+    # each fixture has a set file count: 8 files scan as a spread input
+    # (a file and at least one split per core), 1 file as one partition
     from extraction.corpus import corpus_df
 
     def fixture(files: int):
@@ -94,8 +94,7 @@ def run_checks(spark) -> list[str]:
         "extract skew-aware, no heavy tier, spread scan (read -> mapInArrow)",
         plan_of(spread),
         {
-            "scan is spread": docs.rdd.getNumPartitions()
-            >= spark.sparkContext.defaultParallelism,
+            "scan is spread": is_spread(docs, 8),
             "zero exchanges": "Exchange" not in simple,
             "no placement join": "BroadcastHashJoin" not in simple,
         },

@@ -17,11 +17,12 @@ exactly P distinct values is itself murmur3-hashed by
 partitions — measured 4/8-47/128 EMPTY partitions and max/mean 2.7-6.2x
 versus 1.01-1.24x for plain uniform hashing (results pinned in
 BENCH/skew_balance.json "salted_r2" and BENCH/SKEW.md). The replacement
-(pipeline.repartition_packed) uses exact murmur3-inverse LPT placement
-in the few-enormous-docs regime. In the many-heavy-docs regime, and with
-no heavy docs at all, it keeps a scan that gives every core a partition
-as it is (byte splits balance span mass like uniform hashing does) and
-spreads an under-split scan by uniform hashing.
+(pipeline.repartition_packed) returns uniform hashing in the
+many-heavy-docs regime and exact murmur3-inverse LPT placement in the
+few-enormous-docs regime. With no heavy docs at all it keeps a spread
+file scan (pipeline.is_spread) unshuffled; this audit does not measure
+that case, because its corpora are generated in memory (never a spread
+file scan) and both hold heavy docs, so "packed" is always P partitions.
 
 Corpora measured:
   bench  — 240k docs, heavy_spans=2000 (bench.py's extract corpus, 2x the docs:
@@ -125,9 +126,6 @@ def audit_corpus(spark, name, n_docs, heavy_spans, partitions, out):
         "strategies": {},
     }
     for p in partitions:
-        # with no heavy tier to place, a spread scan keeps its own
-        # partition count, so the packed masses are taken over that
-        packed = repartition_packed(docs, p)
         res = {
             "uniform": stats(
                 partition_mass(docs.repartition(p, F.xxhash64("doc_id"))), p
@@ -135,7 +133,7 @@ def audit_corpus(spark, name, n_docs, heavy_spans, partitions, out):
             "salted_r2": stats(
                 partition_mass(salted_r2(docs, p, (tier.light, tier.heavy))), p
             ),
-            "packed": stats(partition_mass(packed), packed.rdd.getNumPartitions()),
+            "packed": stats(partition_mass(repartition_packed(docs, p)), p),
         }
         for k, v in res.items():
             corpus["strategies"].setdefault(k, []).append(v)
