@@ -11,6 +11,10 @@ Usage (north_rule: ships via --py-files; bench/package.sh builds the zip):
 (--driver-memory must be on the spark-submit command line — the JVM is
 launched before this file's SparkSession config is read.)
 
+``--partitions`` is an upper bound per commit group: a group whose span
+mass is small runs its kernel on fewer partitions, whole waves of the
+cluster's cores of ~64k spans a task (``pipeline.group_partitions``).
+
 ``--gen N`` generates the deterministic synthetic corpus (corpus.py)
 instead of reading ``--input`` (the crash/resume smoke run uses it).
 """
@@ -116,7 +120,12 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--run-id", required=True)
     p.add_argument("--buckets", type=int, default=64)
     p.add_argument("--buckets-per-commit", type=int, default=16)
-    p.add_argument("--partitions", type=int, default=None)
+    p.add_argument(
+        "--partitions", type=int, default=None,
+        help="kernel partitions per commit group, an upper bound: a group "
+             "with little span mass gets fewer (whole waves of cores); "
+             "unset runs the kernel on the input's own partitions",
+    )
     p.add_argument("--shuffle-partitions", type=int, default=64)
     p.add_argument("--master", default=None)
     p.add_argument("--fail-after", type=int, default=None, help="inject crash after k commits (resume test)")

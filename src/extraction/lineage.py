@@ -16,6 +16,14 @@ ok/empty, spans out). The driver builds a row for every bucket of the
 group, empty ones included, from those two dicts: no read-back of the
 committed files and no join.
 
+Only the kernel needs Python, and every Python task costs ~0.2 s of CPU
+in set-up before it reads a row. So each group gets as many kernel
+partitions as its span mass needs (``pipeline.group_partitions``: whole
+waves of cores, ~64k spans a task, at most ``num_partitions``; the
+pre-pass already holds every bucket's ``spans_in``), and the lineage
+rows go to Spark as an Arrow table, a local scan, never as a list of
+rows parallelized through Python tasks.
+
 Sinks dispatch through ``catalog.py``: an output/lineage ref of the form
 ``table:cat.db.name`` commits via Iceberg ``writeTo`` (overwritePartitions
 for bucket groups — one atomic snapshot per commit — and append for
@@ -35,18 +43,23 @@ from __future__ import annotations
 import datetime
 import time
 
+import pyarrow as pa
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .catalog import MISSING_SINK, append_rows, overwrite_buckets, read_back
 from .pipeline import (
     HEAVY_SPAN_THRESHOLD,
+    group_partitions,
     partition_index_salts,
     run_extraction,
     with_partition_id,
 )
 from .schema import LINEAGE_SCHEMA
+
+LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)
 
 
 def committed_buckets(spark: SparkSession, lineage_path: str, run_id: str) -> set[int]:
@@ -82,7 +95,10 @@ def run_with_lineage(
 ) -> None:
     """Extract with per-bucket-group commits; resumes past committed work.
 
-    ``fail_after_commits`` injects a crash after k commits (resume tests).
+    ``num_partitions`` is an upper bound per commit group: each group's
+    kernel runs on ``group_partitions(num_partitions, spans, cores)``
+    partitions. ``fail_after_commits`` injects a crash after k commits
+    (resume tests).
     """
     done = committed_buckets(spark, lineage_path, run_id)
     docs_b = with_partition_id(docs, num_buckets)
@@ -104,6 +120,7 @@ def run_with_lineage(
         .collect()
     }
 
+    cores = spark.sparkContext.defaultParallelism
     commits = 0
     for lo in range(0, num_buckets, buckets_per_commit):
         hi = min(lo + buckets_per_commit, num_buckets)
@@ -111,10 +128,12 @@ def run_with_lineage(
         if not todo:
             continue
         t0 = time.monotonic()
+        stats = [in_stats.get(b, {}) for b in todo]
+        spans = sum(s.get("spans_in") or 0 for s in stats)
         extracted = run_extraction(
             docs_b.filter(F.col("partition_id").isin(todo)).select("doc_id", "spans"),
-            num_partitions=num_partitions,
-            heavy_docs_hint=sum(in_stats.get(b, {}).get("heavy_docs", 0) for b in todo),
+            num_partitions=num_partitions and group_partitions(num_partitions, spans, cores),
+            heavy_docs_hint=sum(s.get("heavy_docs", 0) for s in stats),
         )
         # cluster the output on the bucket key before the hive-partitioned
         # write: without this every kernel task writes a file into every
@@ -159,25 +178,26 @@ def run_with_lineage(
         # and a failed write raises before the observation is read
         overwrite_buckets(out, output_path, "partition_id")
         got = obs.get
-        row = {
+        common = {
             "run_id": run_id,
             "snapshot_id": snapshot_id,
             "wall_ms": int((time.monotonic() - t0) * 1000),
             "committed_at": datetime.datetime.now(datetime.timezone.utc),
         }
-        rows = []
-        for b in todo:
-            s = in_stats.get(b, {})
-            row.update(
-                partition_id=b,
-                min_hash=s.get("min_hash"),
-                max_hash=s.get("max_hash"),
-                input_rows=s.get("input_rows", 0),
-                spans_in=s.get("spans_in") or 0,
+        rows = [
+            {
+                **common,
+                "partition_id": b,
+                "min_hash": s.get("min_hash"),
+                "max_hash": s.get("max_hash"),
+                "input_rows": s.get("input_rows", 0),
+                "spans_in": s.get("spans_in") or 0,
                 **{k: got.get(f"{k}_{b}") or 0 for k in (*counts, "spans_out")},
-            )
-            rows.append(tuple(row[f.name] for f in LINEAGE_SCHEMA.fields))
-        append_rows(spark.createDataFrame(rows, LINEAGE_SCHEMA), lineage_path)
+            }
+            for b, s in zip(todo, stats)
+        ]
+        table = pa.Table.from_pylist(rows, schema=LINEAGE_ARROW)
+        append_rows(spark.createDataFrame(table, LINEAGE_SCHEMA), lineage_path)
         done.update(todo)
         commits += 1
         if fail_after_commits is not None and commits >= fail_after_commits:

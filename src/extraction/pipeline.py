@@ -27,6 +27,9 @@ docs; SURVEY.md §4):
 
 from __future__ import annotations
 
+import math
+
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -35,6 +38,25 @@ from .segment import extract_batches
 
 # docs with more spans than this are routed to the heavy tier
 HEAVY_SPAN_THRESHOLD = 1000
+
+# spans of kernel work that make a Python task worth its start-up: at
+# ~4 us of kernel CPU per span, 64k spans are ~0.25 s, about the 0.2 s of
+# CPU every Python task spends in set-up before it reads a row
+TASK_SPANS = 65536
+
+
+def group_partitions(num_partitions: int, spans: int, cores: int) -> int:
+    """Kernel partitions for ``spans`` spans of work: whole waves of
+    ``cores`` tasks of at least ~TASK_SPANS spans each, capped at
+    ``num_partitions``.
+
+    Every Python task pays a fixed set-up cost, so a small commit group
+    split into P partitions runs mostly set-up. Rounding up to a whole
+    wave keeps every core busy in the last one; a group of at least
+    ``num_partitions * TASK_SPANS`` spans keeps all ``num_partitions``.
+    """
+    waves = max(1, math.ceil(spans / (cores * TASK_SPANS)))
+    return min(num_partitions, cores * waves)
 
 
 def extract(docs: DataFrame) -> DataFrame:
@@ -100,7 +122,7 @@ def partition_index_salts(spark, num_partitions: int) -> list[int]:
 def is_spread(docs: DataFrame, num_partitions: int) -> bool:
     """True when the file scan gives every core a task with rows, and
     makes no more than ``num_partitions`` tasks (the kernel partition
-    count the caller asked for).
+    count the caller asked for, or lineage's count sized to the group).
 
     Both counts are known at planning time, so this launches no Spark
     job. The file count matters as well as the split count: a big file
@@ -162,7 +184,10 @@ def repartition_packed(
 
     ``heavy_docs_hint``: caller-known heavy-tier row count (lineage
     sums it per group from its per-run input stats pass); 0 or at least
-    the guard skips the guard scan entirely.
+    the guard skips the guard scan entirely. Lineage passes a
+    ``num_partitions`` sized to the group's span mass
+    (``group_partitions``), so the guard and ``is_spread`` both compare
+    against that sized count.
     """
     P = num_partitions
     uniform = docs.repartition(max(1, P), F.xxhash64("doc_id"))
@@ -198,12 +223,18 @@ def repartition_packed(
 
     bins = [(0, j) for j in range(P)]
     heapq.heapify(bins)
-    assign = []
+    ids, assign = [], []
     for r in sorted(heavy_rows, key=lambda r: (-r.mass, r.doc_id)):
         load, j = heapq.heappop(bins)
-        assign.append((r.doc_id, salts[j]))
+        ids.append(r.doc_id)
+        assign.append(salts[j])
         heapq.heappush(bins, (load + r.mass, j))
-    amap = spark.createDataFrame(assign, "doc_id string, __salt int")
+    # an Arrow table becomes a LocalTableScan; a list of rows would be
+    # parallelized through Python tasks
+    amap = spark.createDataFrame(
+        pa.table({"doc_id": ids, "__salt": pa.array(assign, pa.int32())}),
+        "doc_id string, __salt int",
+    )
     salt_arr = F.array(*[F.lit(int(v)) for v in salts])
     light_salt = F.element_at(
         salt_arr, (F.pmod(F.xxhash64("doc_id"), F.lit(P)) + 1).cast("int")

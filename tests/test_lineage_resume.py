@@ -1,17 +1,21 @@
 """Resume test (SURVEY.md §5.5): kill after k of n commits, rerun, assert
 identical final table and no duplicate partitions."""
 
+import datetime
 import os
+import re
 
 import pytest
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
+from extraction import lineage, pipeline
 from extraction.corpus import gen_corpus
 from extraction.lineage import committed_buckets, run_with_lineage
 from extraction.oracle import extract_corpus
-from extraction.pipeline import with_partition_id
-from extraction.schema import DOCS_SCHEMA
+from extraction.pipeline import HEAVY_SPAN_THRESHOLD, group_partitions, with_partition_id
+from extraction.schema import DOCS_SCHEMA, LINEAGE_SCHEMA
 
 N_DOCS = 120
 BUCKETS = 8
@@ -31,10 +35,10 @@ def read_result(spark, path):
     }
 
 
-def golden(n=N_DOCS):
+def golden(n=N_DOCS, heavy_spans=100):
     return {
         d: [(s["kind"], s["text"], s["media_ref"], s["order"]) for s in v]
-        for d, v in extract_corpus(gen_corpus(n, heavy_spans=100)).items()
+        for d, v in extract_corpus(gen_corpus(n, heavy_spans=heavy_spans)).items()
     }
 
 
@@ -108,20 +112,33 @@ def test_unreadable_lineage_raises_instead_of_recommitting(spark, docs, tmp_path
 def test_sparse_input_commits_every_bucket(spark, tmp_path):
     """3 docs over 8 buckets land in buckets 3, 4 and 5, so the first
     commit group {0, 1} writes no output at all. Every bucket still
-    commits, empty ones included, and a rerun is a no-op."""
+    commits, empty ones included, and a rerun is a no-op. The lineage
+    rows go to Spark as an Arrow table and read back exactly: declared
+    types, a snapshot id past 2^32, null hashes on empty buckets, and
+    committed_at inside the run's wall window."""
     sparse = spark.createDataFrame(gen_corpus(3, heavy_spans=100), schema=DOCS_SCHEMA)
     out, lin = str(tmp_path / "out"), str(tmp_path / "lineage")
+    snapshot = 2**40 + 7
+    start = datetime.datetime.now()
     run_with_lineage(spark, sparse, out, lin, "run-s", num_buckets=BUCKETS,
-                     buckets_per_commit=PER_COMMIT)
+                     buckets_per_commit=PER_COMMIT, snapshot_id=snapshot)
+    end = datetime.datetime.now()
     assert committed_buckets(spark, lin, "run-s") == set(range(BUCKETS))
     assert read_result(spark, out) == golden(3)
-    lrows = spark.read.parquet(lin).collect()
+    back = spark.read.parquet(lin)
+    types = {f.name: f.dataType for f in back.schema.fields}
+    assert types == {f.name: f.dataType for f in LINEAGE_SCHEMA.fields}
+    assert types["snapshot_id"] == types["min_hash"] == LongType()
+    lrows = back.collect()
     assert len(lrows) == BUCKETS
+    assert all(r.snapshot_id == snapshot and start <= r.committed_at <= end for r in lrows)
     empty = [r for r in lrows if r.input_rows == 0]
     assert empty and all(
-        r.output_rows == r.spans_in == r.spans_out == 0 and r.min_hash is None
+        r.output_rows == r.spans_in == r.spans_out == 0
+        and r.min_hash is None and r.max_hash is None
         for r in empty
     )
+    assert all(r.min_hash <= r.max_hash for r in lrows if r.input_rows)
 
     run_with_lineage(spark, sparse, out, lin, "run-s", num_buckets=BUCKETS,
                      buckets_per_commit=PER_COMMIT)
@@ -193,3 +210,57 @@ def test_run_leaves_session_overwrite_mode_alone(spark, docs, tmp_path):
         assert read_result(spark, out) == golden()
     finally:
         spark.conf.set(key, before)
+
+
+@pytest.mark.parametrize("task_spans", [pipeline.TASK_SPANS, 300])
+def test_group_kernel_partitions_follow_span_mass(spark, tmp_path, monkeypatch, task_spans):
+    """Each commit group runs the kernel on group_partitions(P, its
+    spans, cores) partitions, on the LPT path where it holds heavy docs,
+    with a driver-built salt map that is a local scan. A small
+    TASK_SPANS makes the count vary from group to group; the output and
+    lineage stay exact either way."""
+    heavy = 2000
+    docs = spark.createDataFrame(gen_corpus(N_DOCS, heavy_spans=heavy), schema=DOCS_SCHEMA)
+    monkeypatch.setattr(pipeline, "TASK_SPANS", task_spans)
+    seen = []
+
+    def recording(group, **kwargs):
+        out = pipeline.run_extraction(group, **kwargs)
+        seen.append((kwargs, out._jdf.queryExecution().executedPlan().toString()))
+        return out
+
+    monkeypatch.setattr(lineage, "run_extraction", recording)
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lineage")
+    run_with_lineage(spark, docs, out, lin, "run-p", num_buckets=BUCKETS,
+                     buckets_per_commit=PER_COMMIT, num_partitions=8)
+
+    n = F.size("spans")
+    per_bucket = {
+        r.partition_id: (r.spans, r.heavy)
+        for r in with_partition_id(docs, BUCKETS)
+        .groupBy("partition_id")
+        .agg(F.sum(n).alias("spans"), F.count_if(n > HEAVY_SPAN_THRESHOLD).alias("heavy"))
+        .collect()
+    }
+    cores = spark.sparkContext.defaultParallelism
+    want = []
+    for lo in range(0, BUCKETS, PER_COMMIT):
+        group = [per_bucket.get(b, (0, 0)) for b in range(lo, lo + PER_COMMIT)]
+        want.append((
+            group_partitions(8, sum(s for s, _ in group), cores),
+            sum(h for _, h in group),
+        ))
+    assert [(k["num_partitions"], k["heavy_docs_hint"]) for k, _ in seen] == want
+    if task_spans == 300:
+        assert len({p for p, _ in want}) > 1
+    else:
+        assert all(p == min(8, cores) for p, _ in want)
+    # the salt map is broadcast straight from a local scan
+    salt_map = re.compile(r"BroadcastExchange[^\n]*\n[ |:]*\+- LocalTableScan")
+    packed = [plan for k, plan in seen if k["heavy_docs_hint"]]
+    assert packed and all(salt_map.search(p) for p in packed)
+
+    assert read_result(spark, out) == golden(heavy_spans=heavy)
+    lrows = spark.read.parquet(lin).collect()
+    assert sorted(r.partition_id for r in lrows) == list(range(BUCKETS))
+    assert sum(r.input_rows for r in lrows) == sum(r.output_rows for r in lrows) == N_DOCS

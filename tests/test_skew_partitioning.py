@@ -14,9 +14,12 @@ from urllib.parse import urlparse
 import pytest
 from pyspark.sql import functions as F
 
+from extraction import lineage
 from extraction.corpus import corpus_df
 from extraction.pipeline import (
     HEAVY_SPAN_THRESHOLD,
+    TASK_SPANS,
+    group_partitions,
     partition_index_salts,
     repartition_packed,
     run_extraction,
@@ -208,3 +211,42 @@ def test_packed_extraction_content_identical(spark, tmp_path):
             {"num_partitions": 8, "heavy_docs_hint": 0},
         ):
             assert rows(run_extraction(docs, **kwargs)) == base, kwargs
+
+
+def test_group_partitions_sizes_to_span_mass():
+    """Whole waves of cores of ~TASK_SPANS spans a task, capped at P."""
+    assert TASK_SPANS == 65536
+    assert group_partitions(16, 96_000, 4) == 4
+    assert group_partitions(128, 2_900_000, 32) == 64
+    for p, cores in ((16, 4), (128, 32), (12, 8)):
+        assert group_partitions(p, p * TASK_SPANS, cores) == p
+        assert group_partitions(p, 10 * p * TASK_SPANS, cores) == p
+    assert group_partitions(16, 0, 4) == 4
+    assert group_partitions(2, 0, 4) == 2
+    assert group_partitions(3, 10**6, 8) == 3
+
+
+def test_lineage_group_stays_narrow_on_spread_scan(spark, light_inputs, monkeypatch, tmp_path):
+    """No heavy docs over a spread scan: the 8-file input reads as 4
+    splits at local[4], every group's sized count is 4, and the kernel
+    runs on the scan's own splits with no Exchange before it."""
+    spread, _ = light_inputs
+    cores = spark.sparkContext.defaultParallelism
+    assert len(spread.inputFiles()) == 8
+    assert spread.rdd.getNumPartitions() == cores == 4
+    seen = []
+
+    def recording(group, **kwargs):
+        out = run_extraction(group, **kwargs)
+        seen.append((kwargs, _plan(out)))
+        return out
+
+    monkeypatch.setattr(lineage, "run_extraction", recording)
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lineage")
+    lineage.run_with_lineage(spark, spread, out, lin, "narrow", num_buckets=8,
+                             buckets_per_commit=4, num_partitions=16)
+    assert len(seen) == 2
+    for kwargs, plan in seen:
+        assert kwargs == {"num_partitions": 4, "heavy_docs_hint": 0}
+        assert "Exchange" not in plan, plan
+    assert spark.read.parquet(out).count() == 2000

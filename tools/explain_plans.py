@@ -114,8 +114,9 @@ def run_checks(spark) -> list[str]:
     )
 
     # packed branch: enormous docs ~ P (BENCH/SKEW.md) — exact LPT
-    # placement adds ONE broadcast (the tiny doc_id -> salt map) and
-    # still exactly one shuffle
+    # placement adds ONE broadcast (the tiny doc_id -> salt map, built on
+    # the driver as an Arrow table, so a local scan with no Python task)
+    # and still exactly one shuffle
     lumpy = corpus_df(spark, 400, heavy_spans=20000, slices=2)
     packed = run_extraction(lumpy, num_partitions=8)
     psimple = packed._jdf.queryExecution().executedPlan().toString()
@@ -126,6 +127,9 @@ def run_checks(spark) -> list[str]:
         {
             "exactly one shuffle exchange": shuffles == 1,
             "broadcast placement join": "BroadcastHashJoin" in psimple,
+            "broadcast side is a LocalTableScan": re.search(
+                r"BroadcastExchange[^\n]*\n[ |:]*\+- LocalTableScan", psimple
+            ) is not None,
         },
     )
 
