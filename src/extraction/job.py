@@ -14,6 +14,9 @@ launched before this file's SparkSession config is read.)
 ``--partitions`` is an upper bound per commit group: a group whose span
 mass is small runs its kernel on fewer partitions, whole waves of the
 cluster's cores of ~64k spans a task (``pipeline.group_partitions``).
+The usage line above keeps all 128 only for groups of at least
+128 * 65536 spans: the 240k-doc baseline corpus (~5.7M spans a group
+of 16 buckets) gets 96.
 
 ``--gen N`` generates the deterministic synthetic corpus (corpus.py)
 instead of reading ``--input`` (the crash/resume smoke run uses it).

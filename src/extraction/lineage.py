@@ -53,6 +53,7 @@ from .catalog import MISSING_SINK, append_rows, overwrite_buckets, read_back
 from .pipeline import (
     HEAVY_SPAN_THRESHOLD,
     group_partitions,
+    is_spread,
     partition_index_salts,
     run_extraction,
     with_partition_id,
@@ -129,12 +130,18 @@ def run_with_lineage(
             continue
         t0 = time.monotonic()
         stats = [in_stats.get(b, {}) for b in todo]
-        spans = sum(s.get("spans_in") or 0 for s in stats)
-        extracted = run_extraction(
-            docs_b.filter(F.col("partition_id").isin(todo)).select("doc_id", "spans"),
-            num_partitions=num_partitions and group_partitions(num_partitions, spans, cores),
-            heavy_docs_hint=sum(s.get("heavy_docs", 0) for s in stats),
-        )
+        heavy = sum(s.get("heavy_docs", 0) for s in stats)
+        group = docs_b.filter(F.col("partition_id").isin(todo)).select("doc_id", "spans")
+        k = num_partitions
+        if num_partitions:
+            k = group_partitions(num_partitions, sum(s.get("spans_in") or 0 for s in stats), cores)
+            # light docs over a spread scan run on the scan's splits, no
+            # shuffle; each group's filter keeps the whole input's splits,
+            # which can outnumber k, so merge them into k tasks (a
+            # coalesce is narrow, and leaves the scan spread for k)
+            if not heavy and is_spread(group, num_partitions):
+                group = group.coalesce(k)
+        extracted = run_extraction(group, num_partitions=k, heavy_docs_hint=heavy)
         # cluster the output on the bucket key before the hive-partitioned
         # write: without this every kernel task writes a file into every
         # bucket directory (tasks × buckets small files) and the driver's

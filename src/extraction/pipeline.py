@@ -122,7 +122,7 @@ def partition_index_salts(spark, num_partitions: int) -> list[int]:
 def is_spread(docs: DataFrame, num_partitions: int) -> bool:
     """True when the file scan gives every core a task with rows, and
     makes no more than ``num_partitions`` tasks (the kernel partition
-    count the caller asked for, or lineage's count sized to the group).
+    count the caller asked for; lineage also asks with its upper bound).
 
     Both counts are known at planning time, so this launches no Spark
     job. The file count matters as well as the split count: a big file
@@ -187,7 +187,9 @@ def repartition_packed(
     the guard skips the guard scan entirely. Lineage passes a
     ``num_partitions`` sized to the group's span mass
     (``group_partitions``), so the guard and ``is_spread`` both compare
-    against that sized count.
+    against that sized count; it first coalesces a light group whose
+    scan is spread for its upper bound but has more splits than the
+    sized count, so that group stays narrow too.
     """
     P = num_partitions
     uniform = docs.repartition(max(1, P), F.xxhash64("doc_id"))

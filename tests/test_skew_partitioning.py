@@ -226,27 +226,40 @@ def test_group_partitions_sizes_to_span_mass():
     assert group_partitions(3, 10**6, 8) == 3
 
 
-def test_lineage_group_stays_narrow_on_spread_scan(spark, light_inputs, monkeypatch, tmp_path):
-    """No heavy docs over a spread scan: the 8-file input reads as 4
-    splits at local[4], every group's sized count is 4, and the kernel
-    runs on the scan's own splits with no Exchange before it."""
+@pytest.mark.parametrize("splits", [4, 8])
+def test_lineage_group_stays_narrow_on_spread_scan(spark, light_inputs, monkeypatch, tmp_path, splits):
+    """No heavy docs over a spread scan: every group's sized count is 4
+    at local[4], and the kernel runs on 4 partitions with rows and no
+    Exchange before it. The 8-file input reads as 4 splits by default;
+    with a split byte limit of one file it reads as 8, more splits than
+    the sized count, which lineage merges into 4 without a shuffle."""
     spread, _ = light_inputs
     cores = spark.sparkContext.defaultParallelism
-    assert len(spread.inputFiles()) == 8
-    assert spread.rdd.getNumPartitions() == cores == 4
+    assert len(spread.inputFiles()) == 8 and cores == 4
+    per_file = max(os.path.getsize(urlparse(f).path) for f in spread.inputFiles())
     seen = []
 
     def recording(group, **kwargs):
         out = run_extraction(group, **kwargs)
-        seen.append((kwargs, _plan(out)))
+        filled = group.groupBy(F.spark_partition_id()).count().count()
+        seen.append((kwargs, _plan(out), out.rdd.getNumPartitions(), filled))
         return out
 
     monkeypatch.setattr(lineage, "run_extraction", recording)
     out, lin = str(tmp_path / "out"), str(tmp_path / "lineage")
-    lineage.run_with_lineage(spark, spread, out, lin, "narrow", num_buckets=8,
-                             buckets_per_commit=4, num_partitions=16)
+    try:
+        if splits == 8:
+            # a split holds one file: the next file's open cost overflows it
+            spark.conf.set("spark.sql.files.maxPartitionBytes", str(per_file + 1))
+        docs = spark.read.schema(DOCS_SCHEMA).parquet(*spread.inputFiles())
+        assert docs.rdd.getNumPartitions() == splits
+        lineage.run_with_lineage(spark, docs, out, lin, "narrow", num_buckets=8,
+                                 buckets_per_commit=4, num_partitions=16)
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
     assert len(seen) == 2
-    for kwargs, plan in seen:
+    for kwargs, plan, parts, filled in seen:
         assert kwargs == {"num_partitions": 4, "heavy_docs_hint": 0}
         assert "Exchange" not in plan, plan
+        assert parts == filled == 4
     assert spark.read.parquet(out).count() == 2000
