@@ -36,9 +36,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 TABLE_PREFIX = "table:"
-# AnalysisException conditions that mean "this sink was never written":
-# the only read failures a resume may take as a first run
-MISSING_SINK = ("PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND")
 
 
 def is_table_ref(ref: str) -> bool:
@@ -256,6 +253,17 @@ def append_rows(df: DataFrame, ref: str) -> None:
         df.writeTo(require_catalog(df.sparkSession, ref)).append()
     else:
         df.write.mode("append").parquet(ref)
+
+
+def sink_exists(spark: SparkSession, ref: str) -> bool:
+    """Whether a sink was ever written: the catalog knows the table, or
+    the path exists on its Hadoop file system. Asked before a resume
+    reads a sink, so a first run reads nothing (reading a missing path
+    logs a stack trace) and every read failure is a real one."""
+    if is_table_ref(ref):
+        return spark.catalog.tableExists(require_catalog(spark, ref))
+    path = spark._jvm.org.apache.hadoop.fs.Path(ref)
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path)
 
 
 def read_back(

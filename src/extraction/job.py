@@ -11,12 +11,12 @@ Usage (north_rule: ships via --py-files; bench/package.sh builds the zip):
 (--driver-memory must be on the spark-submit command line — the JVM is
 launched before this file's SparkSession config is read.)
 
-``--partitions`` is an upper bound per commit group: a group whose span
-mass is small runs its kernel on fewer partitions, whole waves of the
-cluster's cores of ~64k spans a task (``pipeline.group_partitions``).
-The usage line above keeps all 128 only for groups of at least
-128 * 65536 spans: the 240k-doc baseline corpus (~5.7M spans a group
-of 16 buckets) gets 96.
+``--partitions`` is an upper bound per commit group. Each group places
+whole buckets on its kernel tasks, at most one task per bucket, in whole
+waves of the cluster's cores of ~64k spans a task
+(``pipeline.group_partitions``). So the usage line above, with 16
+buckets per commit, runs at most 16 kernel tasks a group on local[32]
+(unmeasured on a host that size), and no group ever reaches 128.
 
 ``--gen N`` generates the deterministic synthetic corpus (corpus.py)
 instead of reading ``--input`` (the crash/resume smoke run uses it).
@@ -126,8 +126,9 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument(
         "--partitions", type=int, default=None,
         help="kernel partitions per commit group, an upper bound: a group "
-             "with little span mass gets fewer (whole waves of cores); "
-             "unset runs the kernel on the input's own partitions",
+             "gets at most one per bucket, and fewer when its span mass "
+             "is small (whole waves of cores); unset, the bucket count "
+             "is the only bound",
     )
     p.add_argument("--shuffle-partitions", type=int, default=64)
     p.add_argument("--master", default=None)

@@ -10,19 +10,26 @@ run anti-joins the lineage table and processes only uncommitted buckets
 
 Lineage counts ride along on passes that already happen. One
 ``groupBy(partition_id)`` pre-pass per run yields each pending bucket's
-input stats (hash range, input rows, spans in, heavy docs); an
-``Observation`` on the bucket write yields its output counts (rows, docs
-ok/empty, spans out). The driver builds a row for every bucket of the
-group, empty ones included, from those two dicts: no read-back of the
-committed files and no join.
+input stats (hash range, input rows, spans in); an ``Observation`` on
+the bucket write yields its output counts (rows, docs ok/empty, spans
+out). The driver builds a row for every bucket of the group, empty ones
+included, from those two dicts: no read-back of the committed files and
+no join.
 
-Only the kernel needs Python, and every Python task costs ~0.2 s of CPU
-in set-up before it reads a row. So each group gets as many kernel
-partitions as its span mass needs (``pipeline.group_partitions``: whole
-waves of cores, ~64k spans a task, at most ``num_partitions``; the
-pre-pass already holds every bucket's ``spans_in``), and the lineage
-rows go to Spark as an Arrow table, a local scan, never as a list of
-rows parallelized through Python tasks.
+The pre-pass also gives every bucket's exact span mass, so each group
+places WHOLE buckets on its kernel tasks: ``pipeline.lpt`` packs the
+buckets by ``spans_in`` onto ``group_partitions`` bins (whole waves of
+cores, ~64k spans a task, at most one task per bucket and at most
+``num_partitions``), and one ``repartition`` on the murmur3-inverse
+salt table routes each bucket to its bin. The kernel's own tasks then
+write their buckets, one file per bucket: one shuffle and one write
+stage per group, and no heavy-doc guard scan. Every Python task costs
+~0.2 s of CPU in set-up before it reads a row, which is why the task
+count follows the span mass, and why the lineage rows go to Spark as an
+Arrow table (a local scan), never as a list of rows parallelized
+through Python tasks. A bucket is the unit of placement: two enormous
+docs that hash to one bucket share a kernel task (``run_extraction``
+keeps doc-level LPT for its direct callers).
 
 Sinks dispatch through ``catalog.py``: an output/lineage ref of the form
 ``table:cat.db.name`` commits via Iceberg ``writeTo`` (overwritePartitions
@@ -44,16 +51,14 @@ import datetime
 import time
 
 import pyarrow as pa
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from .catalog import MISSING_SINK, append_rows, overwrite_buckets, read_back
+from .catalog import append_rows, overwrite_buckets, read_back, sink_exists
 from .pipeline import (
-    HEAVY_SPAN_THRESHOLD,
     group_partitions,
-    is_spread,
+    lpt,
     partition_index_salts,
     run_extraction,
     with_partition_id,
@@ -64,21 +69,17 @@ LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)
 
 
 def committed_buckets(spark: SparkSession, lineage_path: str, run_id: str) -> set[int]:
-    """Buckets already committed for ``run_id``. Only a missing lineage
-    path or table reads as "nothing committed" (first run); an unreadable
-    lineage raises, since resuming past it would recompute and re-commit
-    every bucket."""
-    try:
-        rows = (
-            read_back(spark, lineage_path, LINEAGE_SCHEMA)
-            .filter(F.col("run_id") == run_id)
-            .select("partition_id")
-            .collect()
-        )
-    except AnalysisException as e:
-        if e.getCondition() not in MISSING_SINK:
-            raise
+    """Buckets already committed for ``run_id``. A lineage that was never
+    written is a first run and is not read; an unreadable lineage raises,
+    since resuming past it would recompute and re-commit every bucket."""
+    if not sink_exists(spark, lineage_path):
         return set()
+    rows = (
+        read_back(spark, lineage_path, LINEAGE_SCHEMA)
+        .filter(F.col("run_id") == run_id)
+        .select("partition_id")
+        .collect()
+    )
     return {r.partition_id for r in rows}
 
 
@@ -96,18 +97,16 @@ def run_with_lineage(
 ) -> None:
     """Extract with per-bucket-group commits; resumes past committed work.
 
-    ``num_partitions`` is an upper bound per commit group: each group's
-    kernel runs on ``group_partitions(num_partitions, spans, cores)``
-    partitions. ``fail_after_commits`` injects a crash after k commits
-    (resume tests).
+    Each commit group runs its kernel on ``group_partitions(cap, spans,
+    cores)`` tasks, where ``cap`` is the group's bucket count, capped by
+    ``num_partitions`` when given. ``fail_after_commits`` injects a
+    crash after k commits (resume tests).
     """
     done = committed_buckets(spark, lineage_path, run_id)
     docs_b = with_partition_id(docs, num_buckets)
     pending = docs_b.filter(~F.col("partition_id").isin(sorted(done))) if done else docs_b
     # ONE input pass per run yields every pending bucket's lineage input
-    # stats and the heavy-tier row counts that gate the skew-aware
-    # repartition of each group
-    nspans = F.size("spans")
+    # stats, and its span mass places the buckets of each group
     in_stats = {
         r.partition_id: r.asDict()
         for r in pending.groupBy("partition_id")
@@ -115,8 +114,7 @@ def run_with_lineage(
             F.min(F.xxhash64("doc_id")).alias("min_hash"),
             F.max(F.xxhash64("doc_id")).alias("max_hash"),
             F.count("*").alias("input_rows"),
-            F.sum(nspans).alias("spans_in"),
-            F.count_if(nspans > HEAVY_SPAN_THRESHOLD).alias("heavy_docs"),
+            F.sum(F.size("spans")).alias("spans_in"),
         )
         .collect()
     }
@@ -130,52 +128,33 @@ def run_with_lineage(
             continue
         t0 = time.monotonic()
         stats = [in_stats.get(b, {}) for b in todo]
-        heavy = sum(s.get("heavy_docs", 0) for s in stats)
-        group = docs_b.filter(F.col("partition_id").isin(todo)).select("doc_id", "spans")
-        k = num_partitions
-        if num_partitions:
-            k = group_partitions(num_partitions, sum(s.get("spans_in") or 0 for s in stats), cores)
-            # light docs over a spread scan run on the scan's splits, no
-            # shuffle; each group's filter keeps the whole input's splits,
-            # which can outnumber k, so merge them into k tasks (a
-            # coalesce is narrow, and leaves the scan spread for k)
-            if not heavy and is_spread(group, num_partitions):
-                group = group.coalesce(k)
-        extracted = run_extraction(group, num_partitions=k, heavy_docs_hint=heavy)
-        # cluster the output on the bucket key before the hive-partitioned
-        # write: without this every kernel task writes a file into every
-        # bucket directory (tasks × buckets small files) and the driver's
-        # sequential commit renames dominate wall time — measured 40 s of
-        # a 60 s job at 64 kernel partitions × 64 buckets. One extra
-        # shuffle of the (smaller) extracted output buys one file per
-        # bucket and O(buckets) commit work: the standard bucketed-table
-        # write discipline at scale.
-        # repartition(k, partition_id) with k distinct bucket values
-        # hash-COLLIDES (some tasks write 2-3 buckets, others idle —
-        # the same defect tools/skew_balance.py measured on the kernel
-        # path), so each bucket is routed to its exact write task via
-        # the murmur3-inverse salt table
-        wsalts = partition_index_salts(spark, max(1, len(todo)))
-        bucket_salt = F.create_map(
-            *[
-                x
-                for i, b in enumerate(todo)
-                for x in (F.lit(b), F.lit(int(wsalts[i])))
-            ]
+        mass = {b: s.get("spans_in") or 0 for b, s in zip(todo, stats)}
+        cap = min(num_partitions or len(todo), len(todo))
+        k = group_partitions(cap, sum(mass.values()), cores)
+        # whole buckets onto k kernel tasks, each routed to its exact
+        # task by the murmur3-inverse salt table (a plain hash of k or
+        # fewer bucket values collides). Each bucket then sits in one
+        # task, and the dynamic-partition writer on the kernel's tasks
+        # writes one file per bucket with no second shuffle. A bucket
+        # spread over tasks would get a file per task, and the driver's
+        # sequential commit renames then dominate (measured 40 s of a
+        # 60 s job at 64 kernel partitions × 64 buckets)
+        place = lpt(mass.items(), k)
+        salts = partition_index_salts(spark, k)
+        salt = F.create_map(*[x for b in todo for x in (F.lit(b), F.lit(int(salts[place[b]])))])
+        placed = (
+            docs_b.filter(F.col("partition_id").isin(todo))
+            .repartition(k, salt[F.col("partition_id")])
+            .select("doc_id", "spans")
         )
-        routed = (
-            with_partition_id(extracted, num_buckets)
-            .withColumn("__wsalt", bucket_salt[F.col("partition_id")])
-            .repartition(max(1, len(todo)), F.col("__wsalt"))
-            .drop("__wsalt")
-        )
-        # the output counts are observed AFTER the routing shuffle, in the
-        # write's result stage: Spark applies each successful task's
+        extracted = with_partition_id(run_extraction(placed), num_buckets)
+        # the output counts are observed in the write's result stage (after
+        # the group's one shuffle): Spark applies each successful task's
         # metric update once, and the write itself is the only pass
         pid, n = F.col("partition_id"), F.size("spans")
         counts = {"output_rows": F.lit(True), "docs_ok": n > 0, "docs_empty": n == 0}
         obs = Observation()
-        out = routed.observe(
+        out = extracted.observe(
             obs,
             *[F.count_if((pid == b) & c).alias(f"{k}_{b}") for b in todo for k, c in counts.items()],
             *[F.sum(F.when(pid == b, n)).alias(f"spans_out_{b}") for b in todo],
@@ -204,7 +183,9 @@ def run_with_lineage(
             for b, s in zip(todo, stats)
         ]
         table = pa.Table.from_pylist(rows, schema=LINEAGE_ARROW)
-        append_rows(spark.createDataFrame(table, LINEAGE_SCHEMA), lineage_path)
+        # one lineage file per commit: the local scan splits into a task
+        # per core
+        append_rows(spark.createDataFrame(table, LINEAGE_SCHEMA).coalesce(1), lineage_path)
         done.update(todo)
         commits += 1
         if fail_after_commits is not None and commits >= fail_after_commits:

@@ -27,6 +27,7 @@ docs; SURVEY.md §4):
 
 from __future__ import annotations
 
+import heapq
 import math
 
 import pyarrow as pa
@@ -122,7 +123,7 @@ def partition_index_salts(spark, num_partitions: int) -> list[int]:
 def is_spread(docs: DataFrame, num_partitions: int) -> bool:
     """True when the file scan gives every core a task with rows, and
     makes no more than ``num_partitions`` tasks (the kernel partition
-    count the caller asked for; lineage also asks with its upper bound).
+    count the caller asked for).
 
     Both counts are known at planning time, so this launches no Spark
     job. The file count matters as well as the split count: a big file
@@ -143,11 +144,23 @@ def is_spread(docs: DataFrame, num_partitions: int) -> bool:
     return parallelism <= docs.rdd.getNumPartitions() <= num_partitions
 
 
+def lpt(items, bins: int) -> dict:
+    """Longest-processing-time-first placement of ``(key, weight)``
+    items on ``bins`` bins: heaviest first (ties by key), each onto the
+    least-loaded bin (ties by bin index). Returns ``{key: bin}``."""
+    heap = [(0, j) for j in range(bins)]  # sorted, so already a heap
+    place = {}
+    for key, weight in sorted(items, key=lambda kw: (-kw[1], kw[0])):
+        load, j = heapq.heappop(heap)
+        place[key] = j
+        heapq.heappush(heap, (load + weight, j))
+    return place
+
+
 def repartition_packed(
     docs: DataFrame,
     num_partitions: int,
     heavy_span_threshold: int = HEAVY_SPAN_THRESHOLD,
-    heavy_docs_hint: int | None = None,
 ) -> DataFrame:
     """Skew-aware placement: the scan as is, uniform hash, or exact LPT.
 
@@ -174,67 +187,48 @@ def repartition_packed(
       hash repartition into P partitions;
     - many heavy docs (more than the guard of max(4*P, 1024)): the
       uniform hash repartition into P partitions, as measured above;
-    - a few heavy docs: collect the heavy (doc_id, mass) rows, pack them
-      longest-processing-time-first onto the least-loaded partition and
-      route each to its exact physical partition via the murmur3-inverse
-      salt table. Light docs spread uniformly across all P partitions
-      (their per-partition mass is flat by CLT, so LPT packs heavy docs
-      on top of a level base). One broadcast join + one shuffle, exactly
-      P partitions.
+    - a few heavy docs: collect the heavy (doc_id, mass) rows, place
+      them with ``lpt`` and route each to its exact physical partition
+      via the murmur3-inverse salt table. Light docs spread uniformly
+      across all P partitions (their per-partition mass is flat by CLT,
+      so LPT packs heavy docs on top of a level base). One broadcast
+      join + one shuffle, exactly P partitions.
 
-    ``heavy_docs_hint``: caller-known heavy-tier row count (lineage
-    sums it per group from its per-run input stats pass); 0 or at least
-    the guard skips the guard scan entirely. Lineage passes a
-    ``num_partitions`` sized to the group's span mass
-    (``group_partitions``), so the guard and ``is_spread`` both compare
-    against that sized count; it first coalesces a light group whose
-    scan is spread for its upper bound but has more splits than the
-    sized count, so that group stays narrow too.
+    The heavy tier is found by a guard scan (at most guard + 1 rows).
+    ``run_with_lineage`` does not come here: it places whole buckets by
+    their exact span mass from its own pre-pass, so the doc-level
+    placement is for direct callers of ``run_extraction``.
     """
     P = num_partitions
     uniform = docs.repartition(max(1, P), F.xxhash64("doc_id"))
     if P < 2:
         return uniform
     guard = max(4 * P, 1024)
-    if heavy_docs_hint is not None and heavy_docs_hint >= guard:
-        return uniform
-    if heavy_docs_hint == 0:
-        heavy_rows = []
-    else:
-        # the size of one leaf field is the span count, and lets the
-        # guard scan read only spans.kind instead of whole spans
-        # (text_extract's 24k docs on a 4-vCPU VM: 0.12 s instead of
-        # 0.23 s)
-        nspans = F.size(F.col("spans.kind"))
-        heavy_rows = (
-            docs.filter(nspans > heavy_span_threshold)
-            .select(F.col("doc_id"), nspans.alias("mass"))
-            .limit(guard + 1)
-            .collect()
-        )
+    # the size of one leaf field is the span count, and lets the guard
+    # scan read only spans.kind instead of whole spans (text_extract's
+    # 24k docs on a 4-vCPU VM: 0.12 s instead of 0.23 s)
+    nspans = F.size(F.col("spans.kind"))
+    heavy_rows = (
+        docs.filter(nspans > heavy_span_threshold)
+        .select(F.col("doc_id"), nspans.alias("mass"))
+        .limit(guard + 1)
+        .collect()
+    )
     if not heavy_rows:
         return docs if is_spread(docs, P) else uniform
     if len(heavy_rows) > guard:
         return uniform
     spark = docs.sparkSession
     salts = partition_index_salts(spark, P)
-    # LPT greedy bin packing: heaviest doc first onto the least-loaded
-    # partition. Bins start level because the light tier spreads
-    # uniformly (CLT); ties broken by partition index for determinism.
-    import heapq
-
-    bins = [(0, j) for j in range(P)]
-    heapq.heapify(bins)
-    ids, assign = [], []
-    for r in sorted(heavy_rows, key=lambda r: (-r.mass, r.doc_id)):
-        load, j = heapq.heappop(bins)
-        ids.append(r.doc_id)
-        assign.append(salts[j])
-        heapq.heappush(bins, (load + r.mass, j))
+    # bins start level because the light tier spreads uniformly (CLT)
+    place = lpt([(r.doc_id, r.mass) for r in heavy_rows], P)
     # an Arrow table becomes a LocalTableScan; a list of rows would be
     # parallelized through Python tasks
     amap = spark.createDataFrame(
-        pa.table({"doc_id": ids, "__salt": pa.array(assign, pa.int32())}),
+        pa.table({
+            "doc_id": list(place),
+            "__salt": pa.array([salts[j] for j in place.values()], pa.int32()),
+        }),
         "doc_id string, __salt int",
     )
     salt_arr = F.array(*[F.lit(int(v)) for v in salts])
@@ -249,14 +243,8 @@ def repartition_packed(
     )
 
 
-def run_extraction(
-    docs: DataFrame,
-    num_partitions: int | None = None,
-    heavy_docs_hint: int | None = None,
-) -> DataFrame:
+def run_extraction(docs: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """Full pipeline: optional skew-aware repartition + kernel."""
     if num_partitions:
-        docs = repartition_packed(
-            docs, num_partitions, heavy_docs_hint=heavy_docs_hint
-        )
+        docs = repartition_packed(docs, num_partitions)
     return extract(docs)

@@ -19,7 +19,6 @@ for the ordered sink: src/HelperMethods.py:142-157.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -136,19 +135,12 @@ def run_recipe_sink(
     shipped corpus and its dataset card cannot disagree — including
     across crash-reruns.
     """
-    from extraction.catalog import MISSING_SINK, append_rows, overwrite_buckets, read_back
+    from extraction.catalog import append_rows, overwrite_buckets, read_back, sink_exists
 
-    try:
-        already = (
-            read_back(spark, lineage_ref)
-            .filter(F.col("run_id") == run_id)
-            .head(1)
-        )
-    except AnalysisException as e:  # first run: no lineage written yet
-        if e.getCondition() not in MISSING_SINK:
-            raise
-        already = []
-    if already:
+    # a first run has no lineage yet; an unreadable one raises
+    if sink_exists(spark, lineage_ref) and (
+        read_back(spark, lineage_ref).filter(F.col("run_id") == run_id).head(1)
+    ):
         return {"docs_in": 0, "docs_kept": 0, "skipped": True}
 
     staged = recipe_staged(docs)

@@ -10,11 +10,11 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from extraction import lineage, pipeline
+from extraction import catalog, lineage, pipeline
 from extraction.corpus import gen_corpus
 from extraction.lineage import committed_buckets, run_with_lineage
 from extraction.oracle import extract_corpus
-from extraction.pipeline import HEAVY_SPAN_THRESHOLD, group_partitions, with_partition_id
+from extraction.pipeline import group_partitions, with_partition_id
 from extraction.schema import DOCS_SCHEMA, LINEAGE_SCHEMA
 
 N_DOCS = 120
@@ -53,6 +53,8 @@ def test_clean_run_commits_all_buckets(spark, docs, tmp_path):
     assert sum(r.input_rows for r in lrows) == N_DOCS
     assert sum(r.output_rows for r in lrows) == N_DOCS
     assert all(r.docs_ok + r.docs_empty == r.output_rows for r in lrows)
+    # one lineage file per commit
+    assert _files(lin) == {lin: BUCKETS // PER_COMMIT}
 
 
 def test_crash_and_resume_is_idempotent(spark, docs, tmp_path):
@@ -212,55 +214,74 @@ def test_run_leaves_session_overwrite_mode_alone(spark, docs, tmp_path):
         spark.conf.set(key, before)
 
 
+def _files(root, ext=".parquet"):
+    """{directory: parquet file count} under ``root``."""
+    return {d: sum(f.endswith(ext) for f in fs) for d, _, fs in os.walk(root)}
+
+
 @pytest.mark.parametrize("task_spans", [pipeline.TASK_SPANS, 300])
 def test_group_kernel_partitions_follow_span_mass(spark, tmp_path, monkeypatch, task_spans):
-    """Each commit group runs the kernel on group_partitions(P, its
-    spans, cores) partitions, on the LPT path where it holds heavy docs,
-    with a driver-built salt map that is a local scan. A small
-    TASK_SPANS makes the count vary from group to group; the output and
-    lineage stay exact either way."""
-    heavy = 2000
+    """Each commit group places whole buckets on min(its buckets,
+    group_partitions(P, its spans, cores)) kernel tasks through exactly
+    one shuffle, with no join, and those tasks write the buckets: one
+    file per bucket. A small TASK_SPANS raises the count to one task per
+    bucket, below P; the output and lineage stay exact either way."""
+    heavy, buckets, per_commit, p = 2000, 16, 8, 16
     docs = spark.createDataFrame(gen_corpus(N_DOCS, heavy_spans=heavy), schema=DOCS_SCHEMA)
     monkeypatch.setattr(pipeline, "TASK_SPANS", task_spans)
-    seen = []
+    plans = []
 
-    def recording(group, **kwargs):
-        out = pipeline.run_extraction(group, **kwargs)
-        seen.append((kwargs, out._jdf.queryExecution().executedPlan().toString()))
-        return out
+    def recording(df, ref, col):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return catalog.overwrite_buckets(df, ref, col)
 
-    monkeypatch.setattr(lineage, "run_extraction", recording)
+    monkeypatch.setattr(lineage, "overwrite_buckets", recording)
     out, lin = str(tmp_path / "out"), str(tmp_path / "lineage")
-    run_with_lineage(spark, docs, out, lin, "run-p", num_buckets=BUCKETS,
-                     buckets_per_commit=PER_COMMIT, num_partitions=8)
+    run_with_lineage(spark, docs, out, lin, "run-p", num_buckets=buckets,
+                     buckets_per_commit=per_commit, num_partitions=p)
 
-    n = F.size("spans")
-    per_bucket = {
-        r.partition_id: (r.spans, r.heavy)
-        for r in with_partition_id(docs, BUCKETS)
-        .groupBy("partition_id")
-        .agg(F.sum(n).alias("spans"), F.count_if(n > HEAVY_SPAN_THRESHOLD).alias("heavy"))
-        .collect()
+    spans = {
+        r.partition_id: r.spans
+        for r in with_partition_id(docs, buckets)
+        .groupBy("partition_id").agg(F.sum(F.size("spans")).alias("spans")).collect()
     }
     cores = spark.sparkContext.defaultParallelism
-    want = []
-    for lo in range(0, BUCKETS, PER_COMMIT):
-        group = [per_bucket.get(b, (0, 0)) for b in range(lo, lo + PER_COMMIT)]
-        want.append((
-            group_partitions(8, sum(s for s, _ in group), cores),
-            sum(h for _, h in group),
-        ))
-    assert [(k["num_partitions"], k["heavy_docs_hint"]) for k, _ in seen] == want
-    if task_spans == 300:
-        assert len({p for p, _ in want}) > 1
-    else:
-        assert all(p == min(8, cores) for p, _ in want)
-    # the salt map is broadcast straight from a local scan
-    salt_map = re.compile(r"BroadcastExchange[^\n]*\n[ |:]*\+- LocalTableScan")
-    packed = [plan for k, plan in seen if k["heavy_docs_hint"]]
-    assert packed and all(salt_map.search(p) for p in packed)
+    want = [
+        min(per_commit, group_partitions(p, sum(spans.get(b, 0) for b in range(lo, lo + per_commit)), cores))
+        for lo in range(0, buckets, per_commit)
+    ]
+    assert want == [per_commit if task_spans == 300 else cores] * 2
+    shuffle = re.compile(r"Exchange hashpartitioning\(.*, (\d+)\), REPARTITION_BY_NUM")
+    assert len(plans) == len(want)
+    for plan, k in zip(plans, want):
+        assert plan.count("Exchange") == 1, plan
+        assert [int(m) for m in shuffle.findall(plan)] == [k], plan
+        assert "BroadcastHashJoin" not in plan, plan
+        # the tree prints the kernel above the shuffle that feeds it
+        assert plan.index("MapInArrow") < plan.index("Exchange"), plan
 
     assert read_result(spark, out) == golden(heavy_spans=heavy)
     lrows = spark.read.parquet(lin).collect()
-    assert sorted(r.partition_id for r in lrows) == list(range(BUCKETS))
+    assert sorted(r.partition_id for r in lrows) == list(range(buckets))
     assert sum(r.input_rows for r in lrows) == sum(r.output_rows for r in lrows) == N_DOCS
+    written = {os.path.basename(d): n for d, n in _files(out).items() if n}
+    assert written == {f"partition_id={b}": 1 for b in spans}
+    # each bucket's file comes from the kernel task lpt placed it on (a
+    # write task names its file part-<task index>)
+    for lo, k in zip(range(0, buckets, per_commit), want):
+        group = range(lo, lo + per_commit)
+        place = pipeline.lpt([(b, spans.get(b, 0)) for b in group], k)
+        for b in set(group) & set(spans):
+            (name,) = [f for f in os.listdir(os.path.join(out, f"partition_id={b}")) if f.endswith(".parquet")]
+            assert name.startswith(f"part-{place[b]:05d}-"), (b, name, place)
+
+
+def test_missing_lineage_is_not_read(spark, tmp_path, monkeypatch):
+    """A lineage that was never written is a first run: nothing is read
+    (reading a missing path logs a stack trace), nothing is committed."""
+
+    def unread(*args, **kwargs):
+        raise AssertionError("read_back called on a missing lineage")
+
+    monkeypatch.setattr(lineage, "read_back", unread)
+    assert committed_buckets(spark, str(tmp_path / "never-written"), "run-m") == set()

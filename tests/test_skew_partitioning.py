@@ -9,17 +9,20 @@ land on exact physical partition indices) and LPT bin packing.
 """
 
 import os
+import re
 from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
 
-from extraction import lineage
+from extraction import catalog, lineage
 from extraction.corpus import corpus_df
 from extraction.pipeline import (
     HEAVY_SPAN_THRESHOLD,
     TASK_SPANS,
     group_partitions,
+    is_spread,
+    lpt,
     partition_index_salts,
     repartition_packed,
     run_extraction,
@@ -110,23 +113,17 @@ def test_packed_balances_enormous_docs(spark):
 
 
 def test_packed_clt_fallback_is_uniform(spark, light_inputs):
-    """Many heavy docs (at least the guard, max(4P, 1024)): packing can't
-    beat uniform hashing (CLT) and must return the identical uniform
-    plan — no join — on a spread scan as on an under-split one, whether
-    the hint says so or the guard scan overflows."""
+    """Many heavy docs (more than the guard, max(4P, 1024)): packing
+    can't beat uniform hashing (CLT) and must return the identical
+    uniform plan — no join — on a spread scan as on an under-split one."""
     p = 4
-    guard = max(4 * p, 1024)
     spread, single = light_inputs
     for docs in (spread, single):
-        for packed in (
-            repartition_packed(docs, p, heavy_docs_hint=guard),
-            # every doc counts as heavy: the guard scan overflows
-            repartition_packed(docs, p, heavy_span_threshold=0),
-        ):
-            plan = _plan(packed)
-            assert plan.count("Exchange") == 1, plan
-            assert "xxhash64(doc_id" in plan
-            assert "BroadcastHashJoin" not in plan
+        # every doc counts as heavy: the guard scan overflows
+        plan = _plan(repartition_packed(docs, p, heavy_span_threshold=0))
+        assert plan.count("Exchange") == 1, plan
+        assert "xxhash64(doc_id" in plan
+        assert "BroadcastHashJoin" not in plan
 
 
 def test_no_heavy_tier_shuffles_only_an_under_split_scan(spark, light_inputs):
@@ -175,17 +172,18 @@ def test_byte_splits_alone_are_not_spread(spark, light_inputs):
         spark.conf.unset("spark.sql.files.maxPartitionBytes")
 
 
-def test_zero_heavy_hint_launches_no_job(spark, light_inputs):
-    """heavy_docs_hint=0 skips the guard scan, and telling a spread scan
-    from an under-split one is planning only. An input with an exchange
-    of its own (an adaptive plan, e.g. read_increment's join) would run
-    that exchange to report its partition count, so it counts as not
-    spread without asking."""
+def test_is_spread_launches_no_job(spark, light_inputs):
+    """Telling a spread scan from an under-split one is planning only.
+    An input with an exchange of its own (an adaptive plan, e.g.
+    read_increment's join) would run that exchange to report its
+    partition count, so it counts as not spread without asking."""
     spread, single = light_inputs
-    for docs in (spread, single, spread.repartition(8)):
-        assert _new_jobs(spark, lambda: repartition_packed(docs, 8, heavy_docs_hint=0)) == set()
-    # the probe sees a job when there is one: without a hint the guard
-    # scan runs
+    for docs, want in ((spread, True), (single, False), (spread.repartition(8), False)):
+        got = []
+        assert _new_jobs(spark, lambda: got.append(is_spread(docs, 8))) == set()
+        assert got == [want]
+    # the probe sees a job when there is one: repartition_packed's guard
+    # scan
     assert _new_jobs(spark, lambda: repartition_packed(spread, 8))
 
 
@@ -205,12 +203,27 @@ def test_packed_extraction_content_identical(spark, tmp_path):
 
     base = rows(run_extraction(spread, num_partitions=None))
     for docs in (spread, single):
-        for kwargs in (
-            {"num_partitions": 8},
-            {"num_partitions": 8, "heavy_docs_hint": 10**6},
-            {"num_partitions": 8, "heavy_docs_hint": 0},
-        ):
-            assert rows(run_extraction(docs, **kwargs)) == base, kwargs
+        assert rows(run_extraction(docs, num_partitions=8)) == base
+
+
+def test_lpt_places_heaviest_first_on_least_loaded():
+    """Heaviest first, ties by key; each onto the least-loaded bin, ties
+    by bin index."""
+    assert lpt([], 3) == {}
+    assert lpt([("a", 5)], 1) == {"a": 0}
+    # 9 -> 0, 7 -> 1, 6 -> 2, then 4 onto bin 2 (load 6), 3 onto bin 1 (7)
+    assert lpt([("d", 4), ("a", 9), ("e", 3), ("b", 7), ("c", 6)], 3) == {
+        "a": 0, "b": 1, "c": 2, "d": 2, "e": 1,
+    }
+    # equal weights go in key order; equal loads take the lower index
+    assert lpt([(2, 1), (1, 1), (0, 1), (3, 1)], 2) == {0: 0, 1: 1, 2: 0, 3: 1}
+    # a weightless item adds no load, so the next one takes the same bin
+    assert lpt([("x", 0), ("y", 0)], 4) == {"x": 0, "y": 0}
+    # the greedy bound: max load <= mean + largest item
+    items = [(i, (i * 7919) % 101 + 1) for i in range(50)]
+    place = lpt(items, 6)
+    loads = [sum(w for i, w in items if place[i] == j) for j in range(6)]
+    assert max(loads) <= sum(loads) / 6 + max(w for _, w in items)
 
 
 def test_group_partitions_sizes_to_span_mass():
@@ -227,25 +240,23 @@ def test_group_partitions_sizes_to_span_mass():
 
 
 @pytest.mark.parametrize("splits", [4, 8])
-def test_lineage_group_stays_narrow_on_spread_scan(spark, light_inputs, monkeypatch, tmp_path, splits):
-    """No heavy docs over a spread scan: every group's sized count is 4
-    at local[4], and the kernel runs on 4 partitions with rows and no
-    Exchange before it. The 8-file input reads as 4 splits by default;
-    with a split byte limit of one file it reads as 8, more splits than
-    the sized count, which lineage merges into 4 without a shuffle."""
+def test_lineage_group_shuffles_once_on_spread_scan(spark, light_inputs, monkeypatch, tmp_path, splits):
+    """A spread scan gets the same group shape as any input: each group
+    of 4 buckets is placed whole on 4 kernel tasks (its sized count at
+    local[4]) through exactly one shuffle, with no join, whether the
+    8-file input reads as 4 splits (the default) or as 8 (a split byte
+    limit of one file); the kernel's tasks write one file per bucket."""
     spread, _ = light_inputs
     cores = spark.sparkContext.defaultParallelism
     assert len(spread.inputFiles()) == 8 and cores == 4
     per_file = max(os.path.getsize(urlparse(f).path) for f in spread.inputFiles())
-    seen = []
+    plans = []
 
-    def recording(group, **kwargs):
-        out = run_extraction(group, **kwargs)
-        filled = group.groupBy(F.spark_partition_id()).count().count()
-        seen.append((kwargs, _plan(out), out.rdd.getNumPartitions(), filled))
-        return out
+    def recording(df, ref, col):
+        plans.append(_plan(df))
+        return catalog.overwrite_buckets(df, ref, col)
 
-    monkeypatch.setattr(lineage, "run_extraction", recording)
+    monkeypatch.setattr(lineage, "overwrite_buckets", recording)
     out, lin = str(tmp_path / "out"), str(tmp_path / "lineage")
     try:
         if splits == 8:
@@ -257,9 +268,14 @@ def test_lineage_group_stays_narrow_on_spread_scan(spark, light_inputs, monkeypa
                                  buckets_per_commit=4, num_partitions=16)
     finally:
         spark.conf.unset("spark.sql.files.maxPartitionBytes")
-    assert len(seen) == 2
-    for kwargs, plan, parts, filled in seen:
-        assert kwargs == {"num_partitions": 4, "heavy_docs_hint": 0}
-        assert "Exchange" not in plan, plan
-        assert parts == filled == 4
+    assert len(plans) == 2
+    for plan in plans:
+        assert plan.count("Exchange") == 1, plan
+        assert re.search(r"Exchange hashpartitioning\(.*, 4\), REPARTITION_BY_NUM", plan), plan
+        assert "BroadcastHashJoin" not in plan, plan
     assert spark.read.parquet(out).count() == 2000
+    written = {
+        os.path.basename(d): sum(f.endswith(".parquet") for f in fs)
+        for d, _, fs in os.walk(out) if d != out
+    }
+    assert written == {f"partition_id={b}": 1 for b in range(8)}
