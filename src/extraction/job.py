@@ -11,12 +11,16 @@ Usage (north_rule: ships via --py-files; bench/package.sh builds the zip):
 (--driver-memory must be on the spark-submit command line — the JVM is
 launched before this file's SparkSession config is read.)
 
-``--partitions`` is an upper bound per commit group. Each group places
-whole buckets on its kernel tasks, at most one task per bucket, in whole
-waves of the cluster's cores of ~64k spans a task
-(``pipeline.group_partitions``). So the usage line above, with 16
-buckets per commit, runs at most 16 kernel tasks a group on local[32]
-(unmeasured on a host that size), and no group ever reaches 128.
+``--partitions`` is an upper bound per commit group. Each group sizes
+its kernel in whole waves of the cluster's cores of ~64k spans a task
+(``pipeline.group_partitions``) and places whole buckets on those tasks,
+at most one task per bucket, which then write their buckets. A group
+with fewer buckets than cores whose buckets each carry more than ~64k
+spans would leave cores idle, so it runs the kernel doc-level on the
+sized count and shuffles once more to one write task per bucket. The
+usage line above, with 16 buckets per commit on local[32], is that case
+on the 240k-doc baseline corpus (~5.7M spans a group): 96 kernel tasks
+a group, then 16 write tasks (unmeasured on a host that size).
 
 ``--gen N`` generates the deterministic synthetic corpus (corpus.py)
 instead of reading ``--input`` (the crash/resume smoke run uses it).
@@ -126,9 +130,10 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument(
         "--partitions", type=int, default=None,
         help="kernel partitions per commit group, an upper bound: a group "
-             "gets at most one per bucket, and fewer when its span mass "
-             "is small (whole waves of cores); unset, the bucket count "
-             "is the only bound",
+             "gets whole waves of cores sized to its span mass, at most one "
+             "per bucket unless it has fewer buckets than cores and more "
+             "than ~64k spans a bucket; unset, max(buckets per commit, "
+             "cores) is the bound",
     )
     p.add_argument("--shuffle-partitions", type=int, default=64)
     p.add_argument("--master", default=None)

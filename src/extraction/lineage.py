@@ -23,13 +23,17 @@ cores, ~64k spans a task, at most one task per bucket and at most
 ``num_partitions``), and one ``repartition`` on the murmur3-inverse
 salt table routes each bucket to its bin. The kernel's own tasks then
 write their buckets, one file per bucket: one shuffle and one write
-stage per group, and no heavy-doc guard scan. Every Python task costs
-~0.2 s of CPU in set-up before it reads a row, which is why the task
-count follows the span mass, and why the lineage rows go to Spark as an
-Arrow table (a local scan), never as a list of rows parallelized
-through Python tasks. A bucket is the unit of placement: two enormous
-docs that hash to one bucket share a kernel task (``run_extraction``
-keeps doc-level LPT for its direct callers).
+stage per group, and no heavy-doc guard scan. The one exception is a
+group with fewer buckets than cores and more than ~64k spans a bucket,
+where one task per bucket would leave cores idle through a long
+kernel: it runs the kernel doc-level (``run_extraction``'s placement)
+on its sized count, then shuffles to one write task per bucket. Every
+Python task costs ~0.2 s of CPU in set-up before it reads a row, which
+is why the task count follows the span mass, and why the lineage rows
+go to Spark as an Arrow table (a local scan), never as a list of rows
+parallelized through Python tasks. On the one-shuffle path a bucket is
+the unit of placement: two enormous docs that hash to one bucket share
+a kernel task.
 
 Sinks dispatch through ``catalog.py``: an output/lineage ref of the form
 ``table:cat.db.name`` commits via Iceberg ``writeTo`` (overwritePartitions
@@ -57,6 +61,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from .catalog import append_rows, overwrite_buckets, read_back, sink_exists
 from .pipeline import (
+    TASK_SPANS,
     group_partitions,
     lpt,
     partition_index_salts,
@@ -97,10 +102,14 @@ def run_with_lineage(
 ) -> None:
     """Extract with per-bucket-group commits; resumes past committed work.
 
-    Each commit group runs its kernel on ``group_partitions(cap, spans,
-    cores)`` tasks, where ``cap`` is the group's bucket count, capped by
-    ``num_partitions`` when given. ``fail_after_commits`` injects a
-    crash after k commits (resume tests).
+    Each commit group sizes its kernel to ``k = group_partitions(cap,
+    spans, cores)``, where ``cap`` is ``num_partitions``, or the larger
+    of the group's bucket count and ``cores`` when unset. Its buckets go
+    whole onto ``min(k, buckets)`` tasks, unless the group has fewer
+    buckets than ``min(k, cores)`` and more than ``TASK_SPANS`` spans a
+    bucket: then the kernel runs doc-level on k tasks and a second
+    shuffle routes each bucket to its write task. ``fail_after_commits``
+    injects a crash after k commits (resume tests).
     """
     done = committed_buckets(spark, lineage_path, run_id)
     docs_b = with_partition_id(docs, num_buckets)
@@ -129,27 +138,36 @@ def run_with_lineage(
         t0 = time.monotonic()
         stats = [in_stats.get(b, {}) for b in todo]
         mass = {b: s.get("spans_in") or 0 for b, s in zip(todo, stats)}
-        cap = min(num_partitions or len(todo), len(todo))
-        k = group_partitions(cap, sum(mass.values()), cores)
-        # whole buckets onto k kernel tasks, each routed to its exact
-        # task by the murmur3-inverse salt table (a plain hash of k or
-        # fewer bucket values collides). Each bucket then sits in one
-        # task, and the dynamic-partition writer on the kernel's tasks
-        # writes one file per bucket with no second shuffle. A bucket
-        # spread over tasks would get a file per task, and the driver's
-        # sequential commit renames then dominate (measured 40 s of a
-        # 60 s job at 64 kernel partitions × 64 buckets)
-        place = lpt(mass.items(), k)
-        salts = partition_index_salts(spark, k)
+        spans = sum(mass.values())
+        k = group_partitions(num_partitions or max(len(todo), cores), spans, cores)
+        # fewer buckets than cores, each carrying more than a task's worth
+        # of spans, would leave cores idle through a long kernel (the
+        # text_extract input as 2 buckets, 1 per commit, at local[4]:
+        # 14-32% more wall): there the kernel runs doc-level on k tasks
+        # and a second shuffle gives each bucket its one write task
+        spread = len(todo) < min(k, cores) and spans > len(todo) * TASK_SPANS
+        bins = len(todo) if spread else min(k, len(todo))
+        # whole buckets onto the bins, each routed to its exact task by
+        # the murmur3-inverse salt table (a plain hash of k or fewer
+        # bucket values collides). Each bucket then sits in one task,
+        # and the dynamic-partition writer writes one file per bucket. A
+        # bucket spread over tasks would get a file per task, and the
+        # driver's sequential commit renames then dominate (measured 40 s
+        # of a 60 s job at 64 kernel partitions × 64 buckets)
+        place = lpt(mass.items(), bins)
+        salts = partition_index_salts(spark, bins)
         salt = F.create_map(*[x for b in todo for x in (F.lit(b), F.lit(int(salts[place[b]])))])
-        placed = (
-            docs_b.filter(F.col("partition_id").isin(todo))
-            .repartition(k, salt[F.col("partition_id")])
-            .select("doc_id", "spans")
-        )
-        extracted = with_partition_id(run_extraction(placed), num_buckets)
+        group = docs_b.filter(F.col("partition_id").isin(todo))
+        if spread:
+            extracted = with_partition_id(
+                run_extraction(group.select("doc_id", "spans"), k), num_buckets
+            ).repartition(bins, salt[F.col("partition_id")])
+        else:
+            # the kernel's own tasks write: one shuffle, one write stage
+            placed = group.repartition(bins, salt[F.col("partition_id")]).select("doc_id", "spans")
+            extracted = with_partition_id(run_extraction(placed), num_buckets)
         # the output counts are observed in the write's result stage (after
-        # the group's one shuffle): Spark applies each successful task's
+        # the group's last shuffle): Spark applies each successful task's
         # metric update once, and the write itself is the only pass
         pid, n = F.col("partition_id"), F.size("spans")
         counts = {"output_rows": F.lit(True), "docs_ok": n > 0, "docs_empty": n == 0}

@@ -276,6 +276,53 @@ def test_group_kernel_partitions_follow_span_mass(spark, tmp_path, monkeypatch, 
             assert name.startswith(f"part-{place[b]:05d}-"), (b, name, place)
 
 
+def test_few_heavy_buckets_keep_every_core(spark, tmp_path, monkeypatch):
+    """A group with fewer buckets than cores whose buckets each carry more
+    than TASK_SPANS runs its kernel doc-level on group_partitions(P,
+    spans, cores) tasks, then a second shuffle gives each bucket its one
+    write task: whole-bucket placement would run 2 kernel tasks on 4
+    cores. Output, lineage and one file per bucket stay exact."""
+    heavy, buckets, per_commit, p = 2000, 8, 2, 16
+    docs = spark.createDataFrame(gen_corpus(N_DOCS, heavy_spans=heavy), schema=DOCS_SCHEMA)
+    for mod in (pipeline, lineage):
+        monkeypatch.setattr(mod, "TASK_SPANS", 300)
+    plans = []
+
+    def recording(df, ref, col):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return catalog.overwrite_buckets(df, ref, col)
+
+    monkeypatch.setattr(lineage, "overwrite_buckets", recording)
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lineage")
+    run_with_lineage(spark, docs, out, lin, "run-f", num_buckets=buckets,
+                     buckets_per_commit=per_commit, num_partitions=p)
+
+    spans = {
+        r.partition_id: r.spans
+        for r in with_partition_id(docs, buckets)
+        .groupBy("partition_id").agg(F.sum(F.size("spans")).alias("spans")).collect()
+    }
+    cores = spark.sparkContext.defaultParallelism
+    assert per_commit < cores
+    groups = [range(lo, lo + per_commit) for lo in range(0, buckets, per_commit)]
+    mass = [sum(spans.get(b, 0) for b in g) for g in groups]
+    assert all(m > per_commit * 300 for m in mass)
+    shuffle = re.compile(r"Exchange hashpartitioning\(.*, (\d+)\), REPARTITION_BY_NUM")
+    assert len(plans) == len(groups)
+    for plan, m in zip(plans, mass):
+        # top-down: the routing shuffle into one write task per bucket
+        # above the kernel, the kernel's own shuffle into k below it
+        assert [int(x) for x in shuffle.findall(plan)] == [per_commit, group_partitions(p, m, cores)], plan
+        assert shuffle.search(plan).start() < plan.index("MapInArrow"), plan
+
+    assert read_result(spark, out) == golden(heavy_spans=heavy)
+    lrows = spark.read.parquet(lin).collect()
+    assert sorted(r.partition_id for r in lrows) == list(range(buckets))
+    assert sum(r.input_rows for r in lrows) == sum(r.output_rows for r in lrows) == N_DOCS
+    written = {os.path.basename(d): n for d, n in _files(out).items() if n}
+    assert written == {f"partition_id={b}": 1 for b in spans}
+
+
 def test_missing_lineage_is_not_read(spark, tmp_path, monkeypatch):
     """A lineage that was never written is a first run: nothing is read
     (reading a missing path logs a stack trace), nothing is committed."""
