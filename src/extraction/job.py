@@ -3,13 +3,17 @@
 Usage (north_rule: ships via --py-files; bench/package.sh builds the zip):
 
     spark-submit --master local[32] --driver-memory 12g \
+        --driver-java-options "-XX:+UseParallelGC -XX:TieredStopAtLevel=1 -XX:GCTimeRatio=19" \
         --py-files dist/extraction.zip \
         src/extraction/job.py --input /path/docs_parquet \
         --output /path/extracted --lineage /path/lineage \
         --run-id run1 --buckets 64 --partitions 128
 
-(--driver-memory must be on the spark-submit command line — the JVM is
-launched before this file's SparkSession config is read.)
+(--driver-memory and --driver-java-options must be on the spark-submit
+command line: the JVM is launched before this file's SparkSession config
+is read, so ``build_session``'s driver size and ``DRIVER_JAVA_OPTS`` only
+reach JVMs that ``build_session`` itself launches. The job warns on
+stderr when a flag of the policy is missing from the running JVM.)
 
 ``--partitions`` is an upper bound per commit group. Each group sizes
 its kernel in whole waves of the cluster's cores of ~64k spans a task
@@ -29,14 +33,80 @@ instead of reading ``--input`` (the crash/resume smoke run uses it).
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 import time
+
+# The driver JVM's policy, measured on a 4-vCPU, 15 GB VM at local[4]:
+# - UseParallelGC: G1 collapses under the Arrow JNI critical sections
+#   (GCLocker retry storms) at high task concurrency; throughput-oriented
+#   ParallelGC is ~3x faster for this batch workload.
+# - TieredStopAtLevel=1 (C1 only): C2 compiling Spark's own code was 37 s
+#   of a 62 s cold pass of the perfbench mixed_job job, and a job run is
+#   one cold pass. C1 compiles in a fraction of that.
+# - GCTimeRatio=19 (a 5% GC-time goal): C1 code has no escape analysis
+#   and allocates more, and ParallelGC grows eden to meet its default 1%
+#   goal: C1 alone raised peak committed eden 802 -> 1192 MiB and peak
+#   RSS by 16-19%. A ratio, not a size, so it carries to larger hosts.
+# Together, over 10 alternating perfbench pairs against ParallelGC with
+# the default tiered JIT: mixed_job CPU per 1000 docs 9.1 -> 5.8 s,
+# session set-up -41%, peak RSS -12%; text_extract, whose measured
+# passes are warm, set-up -33%, peak RSS -7%, CPU per 1000 docs +7%
+# (inside the run-to-run spread). Long, JVM-heavy sessions pay for C1's
+# slower code: tools/compare_oracle.py (109 queries, one session) ran
+# 14% and 61% slower in two pairs.
+DRIVER_JAVA_OPTS = "-XX:+UseParallelGC -XX:TieredStopAtLevel=1 -XX:GCTimeRatio=19"
+
+
+def driver_java_opts() -> str:
+    """The driver JVM's flags: ``EXTRACTION_DRIVER_JAVA_OPTS`` when set,
+    else ``DRIVER_JAVA_OPTS``."""
+    return os.environ.get("EXTRACTION_DRIVER_JAVA_OPTS", DRIVER_JAVA_OPTS)
+
+
+CGROUP_MEM_LIMITS = ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes")
+
+
+def host_mem_bytes(limit_files: tuple[str, ...] = CGROUP_MEM_LIMITS) -> int:
+    """RAM this process may use: the first cgroup memory limit found
+    (v2, then v1) when it is below physical RAM, else physical RAM."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in limit_files:
+        try:
+            with open(path) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():
+            return min(int(limit), phys)
+    return phys
+
+
+def driver_mem_mb(host_bytes: int) -> int:
+    """Driver heap: a quarter of host RAM, capped at 12g, so the JVM's
+    off-heap, the Python workers and the page cache fit beside it."""
+    return min(12 * 1024, host_bytes // 4 // 2**20)
+
+
+def jvm_flags_missing(input_args: list[str], policy: str) -> list[str]:
+    """The flags of ``policy`` that the JVM was not launched with."""
+    return [f for f in policy.split() if f not in input_args]
+
+
+def jvm_counters(spark) -> dict[str, float]:
+    """Seconds the driver JVM spent, since launch, in the JIT compilers
+    and in garbage collection (``CompilationMXBean`` and the
+    ``GarbageCollectorMXBean`` times, read through py4j)."""
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    gc_ms = sum(max(b.getCollectionTime(), 0) for b in mf.getGarbageCollectorMXBeans())
+    return {
+        "jit_s": mf.getCompilationMXBean().getTotalCompilationTime() / 1000,
+        "gc_s": gc_ms / 1000,
+    }
 
 
 def build_session(master: str | None, shuffle_partitions: int, app: str = "extraction"):
     from pyspark.sql import SparkSession
-
-    import os as _os
 
     # Allocator split, measured on this box (6-iteration A/B, exp12):
     # - JVM (driver env, set before launch): keep 64 MB Tungsten pages on
@@ -48,8 +118,9 @@ def build_session(master: str | None, shuffle_partitions: int, app: str = "extra
     #   bound (fragmented main arena under alternating 100 MB Arrow /
     #   NumPy allocations) and kernel time per worker exploded — runs
     #   degraded 25 s -> 135 s across iterations; jemalloc stays flat.
-    _os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "268435456")
-    _os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "1073741824")
+    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "268435456")
+    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", "1073741824")
+    mem_mb = driver_mem_mb(host_mem_bytes())
 
     b = (
         SparkSession.builder.appName(app)
@@ -58,17 +129,13 @@ def build_session(master: str | None, shuffle_partitions: int, app: str = "extra
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", "131072")
         # local mode runs everything in the driver JVM; the 1g default
         # heap thrashes GC with 32 concurrent tasks over fat Arrow
-        # batches (only effective at first JVM launch in the process).
-        # Measured on this box: G1 collapses under the Arrow JNI
-        # critical sections (GCLocker retry storms) at high task
-        # concurrency — throughput-oriented ParallelGC is ~3× faster for
-        # this batch workload, and a moderate heap beats a huge one.
-        .config("spark.driver.memory", _os.environ.get("EXTRACTION_DRIVER_MEM", "12g"))
-        .config("spark.driver.maxResultSize", "4g")
-        .config(
-            "spark.driver.extraJavaOptions",
-            _os.environ.get("EXTRACTION_DRIVER_JAVA_OPTS", "-XX:+UseParallelGC"),
-        )
+        # batches, and a moderate heap beats a huge one. Driver size,
+        # result cap (a third of the heap) and the JVM policy
+        # (DRIVER_JAVA_OPTS) are only effective at the first JVM launch
+        # in the process
+        .config("spark.driver.memory", os.environ.get("EXTRACTION_DRIVER_MEM", f"{mem_mb}m"))
+        .config("spark.driver.maxResultSize", f"{mem_mb // 3}m")
+        .config("spark.driver.extraJavaOptions", driver_java_opts())
         # shuffle spill dir: this sandbox's disk sustains ~65 MB/s
         # buffered writes (writeback throttling blocks shuffle writers in
         # D-state and serializes the whole job); RAM-backed local dirs
@@ -76,7 +143,7 @@ def build_session(master: str | None, shuffle_partitions: int, app: str = "extra
         # shuffle — this models that, it does not hide a plan problem.
         .config(
             "spark.local.dir",
-            _os.environ.get("EXTRACTION_LOCAL_DIR", "/dev/shm/spark-local"),
+            os.environ.get("EXTRACTION_LOCAL_DIR", "/dev/shm/spark-local"),
         )
         # tmpfs local dirs don't support sendfile, so the shuffle-merge
         # transferTo path falls back to mmap+copy+munmap per segment —
@@ -147,6 +214,15 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = build_session(a.master, a.shuffle_partitions)
     try:
+        policy = driver_java_opts()
+        mf = spark._jvm.java.lang.management.ManagementFactory
+        missing = jvm_flags_missing(list(mf.getRuntimeMXBean().getInputArguments()), policy)
+        if missing:
+            print(
+                f"WARNING: the driver JVM runs without {' '.join(missing)}; pass "
+                f'--driver-java-options "{policy}" to spark-submit',
+                file=sys.stderr,
+            )
         if a.mode == "recipe":
             from extraction.recipe import run_recipe_sink
 
@@ -198,7 +274,11 @@ def main(argv: list[str] | None = None) -> int:
         )
         wall = time.monotonic() - t0
         n = read_back(spark, a.output).count()
-        print(f"EXTRACTION_DONE docs={n} wall_sec={wall:.2f} docs_per_sec={n / wall:.1f}")
+        jvm = jvm_counters(spark)
+        print(
+            f"EXTRACTION_DONE docs={n} wall_sec={wall:.2f} docs_per_sec={n / wall:.1f} "
+            f"jit_s={jvm['jit_s']:.2f} gc_s={jvm['gc_s']:.2f}"
+        )
         return 0
     finally:
         spark.stop()

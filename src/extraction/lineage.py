@@ -44,9 +44,14 @@ append-only and idempotent at bucket granularity: output is partitioned
 by bucket, so a re-executed uncommitted bucket overwrites only its own
 buckets (dynamic overwrite), never touching committed data.
 
-At 10^12-doc scale the docs table is partitioned/bucketed by the same
-hash, so each bucket-group filter prunes to its own files instead of
-rescanning the corpus.
+Each group filters ``partition_id`` over a column computed from
+``xxhash64(doc_id)`` on the scan, so every group scans the whole input,
+however that input is laid out on disk: no file is pruned.
+
+A resume must run at the bucket count it was started with: bucket ``b``
+under 8 buckets is a different set of docs from bucket ``b`` under 4.
+Every lineage row records ``num_buckets``, and a resume whose committed
+rows disagree (or predate the column) raises before it writes anything.
 """
 
 from __future__ import annotations
@@ -73,18 +78,32 @@ from .schema import LINEAGE_SCHEMA
 LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)
 
 
-def committed_buckets(spark: SparkSession, lineage_path: str, run_id: str) -> set[int]:
+def committed_buckets(
+    spark: SparkSession, lineage_path: str, run_id: str, num_buckets: int | None = None
+) -> set[int]:
     """Buckets already committed for ``run_id``. A lineage that was never
     written is a first run and is not read; an unreadable lineage raises,
-    since resuming past it would recompute and re-commit every bucket."""
+    since resuming past it would recompute and re-commit every bucket.
+    Given ``num_buckets``, a committed row under another bucket count, or
+    under an unknown one (null), raises: its bucket ids name other docs,
+    and resuming past them would drop docs without an error."""
     if not sink_exists(spark, lineage_path):
         return set()
     rows = (
         read_back(spark, lineage_path, LINEAGE_SCHEMA)
         .filter(F.col("run_id") == run_id)
-        .select("partition_id")
+        .select("partition_id", "num_buckets")
         .collect()
     )
+    if num_buckets is not None:
+        other = {r.num_buckets for r in rows} - {num_buckets}
+        if other:
+            raise ValueError(
+                f"run {run_id!r} has buckets committed under num_buckets="
+                f"{sorted(other, key=str)}; it cannot resume at num_buckets="
+                f"{num_buckets}: resume at the count it started with, or start "
+                f"a new run_id on an empty output"
+            )
     return {r.partition_id for r in rows}
 
 
@@ -108,10 +127,12 @@ def run_with_lineage(
     whole onto ``min(k, buckets)`` tasks, unless the group has fewer
     buckets than ``min(k, cores)`` and more than ``TASK_SPANS`` spans a
     bucket: then the kernel runs doc-level on k tasks and a second
-    shuffle routes each bucket to its write task. ``fail_after_commits``
-    injects a crash after k commits (resume tests).
+    shuffle routes each bucket to its write task. A resume at another
+    ``num_buckets`` than the run's committed rows raises before any
+    write. ``fail_after_commits`` injects a crash after k commits (resume
+    tests).
     """
-    done = committed_buckets(spark, lineage_path, run_id)
+    done = committed_buckets(spark, lineage_path, run_id, num_buckets)
     docs_b = with_partition_id(docs, num_buckets)
     pending = docs_b.filter(~F.col("partition_id").isin(sorted(done))) if done else docs_b
     # ONE input pass per run yields every pending bucket's lineage input
@@ -192,6 +213,7 @@ def run_with_lineage(
             {
                 **common,
                 "partition_id": b,
+                "num_buckets": num_buckets,
                 "min_hash": s.get("min_hash"),
                 "max_hash": s.get("max_hash"),
                 "input_rows": s.get("input_rows", 0),

@@ -67,6 +67,9 @@ LINEAGE_SCHEMA = StructType(
         StructField("run_id", StringType(), False),
         StructField("snapshot_id", LongType(), False),
         StructField("partition_id", IntegerType(), False),
+        # the bucket count partition_id was taken under; null in a lineage
+        # written before the column existed (a resume over it refuses)
+        StructField("num_buckets", IntegerType(), True),
         StructField("min_hash", LongType(), True),
         StructField("max_hash", LongType(), True),
         StructField("input_rows", LongType(), False),

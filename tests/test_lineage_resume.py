@@ -50,6 +50,7 @@ def test_clean_run_commits_all_buckets(spark, docs, tmp_path):
     assert read_result(spark, out) == golden()
     lrows = spark.read.parquet(lin).collect()
     assert len(lrows) == BUCKETS  # exactly one lineage row per bucket
+    assert all(r.num_buckets == BUCKETS for r in lrows)
     assert sum(r.input_rows for r in lrows) == N_DOCS
     assert sum(r.output_rows for r in lrows) == N_DOCS
     assert all(r.docs_ok + r.docs_empty == r.output_rows for r in lrows)
@@ -109,6 +110,47 @@ def test_unreadable_lineage_raises_instead_of_recommitting(spark, docs, tmp_path
         run_with_lineage(spark, docs, out, lin, "run-d", num_buckets=BUCKETS,
                          buckets_per_commit=PER_COMMIT)
     assert lineage_files() == parts  # no lineage rows appended
+
+
+def _tree(root):
+    """{file path: (size, mtime_ns)} of every file under ``root``."""
+    paths = (os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs)
+    return {p: (st.st_size, st.st_mtime_ns) for p in paths for st in [os.stat(p)]}
+
+
+def test_resume_at_another_bucket_count_refuses(spark, docs, tmp_path):
+    """A crash at 8 buckets and a resume of the same run at 4: bucket b
+    names other docs under 4 buckets, so skipping the committed ids
+    would drop about half the docs without an error. The resume raises
+    before any write and leaves output and lineage as they were."""
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lineage")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_with_lineage(spark, docs, out, lin, "run-rb", num_buckets=8,
+                         buckets_per_commit=4, fail_after_commits=1)
+    before = _tree(tmp_path)
+    assert committed_buckets(spark, lin, "run-rb", 8) == {0, 1, 2, 3}
+    with pytest.raises(ValueError, match=r"num_buckets=\[8\].*num_buckets=4"):
+        run_with_lineage(spark, docs, out, lin, "run-rb", num_buckets=4,
+                         buckets_per_commit=4)
+    assert _tree(tmp_path) == before
+    # another run id over the same lineage is a fresh run, not a resume
+    assert committed_buckets(spark, lin, "run-other", 4) == set()
+
+
+def test_resume_over_lineage_without_bucket_count_refuses(spark, docs, tmp_path):
+    """A lineage written before ``num_buckets`` existed reads the column
+    as null: the bucket count of its commits is unknown, so a resume
+    over it refuses instead of guessing."""
+    out, lin, old = (str(tmp_path / n) for n in ("out", "lineage", "old"))
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_with_lineage(spark, docs, out, lin, "run-old", num_buckets=BUCKETS,
+                         buckets_per_commit=PER_COMMIT, fail_after_commits=1)
+    spark.read.parquet(lin).drop("num_buckets").write.parquet(old)
+    before = _tree(tmp_path)
+    with pytest.raises(ValueError, match=r"num_buckets=\[None\]"):
+        run_with_lineage(spark, docs, out, old, "run-old", num_buckets=BUCKETS,
+                         buckets_per_commit=PER_COMMIT)
+    assert _tree(tmp_path) == before
 
 
 def test_sparse_input_commits_every_bucket(spark, tmp_path):
