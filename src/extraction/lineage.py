@@ -79,20 +79,26 @@ LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)
 
 
 def committed_buckets(
-    spark: SparkSession, lineage_path: str, run_id: str, num_buckets: int | None = None
+    spark: SparkSession,
+    lineage_path: str,
+    run_id: str,
+    num_buckets: int | None = None,
+    snapshot_id: int | None = None,
 ) -> set[int]:
     """Buckets already committed for ``run_id``. A lineage that was never
     written is a first run and is not read; an unreadable lineage raises,
     since resuming past it would recompute and re-commit every bucket.
     Given ``num_buckets``, a committed row under another bucket count, or
     under an unknown one (null), raises: its bucket ids name other docs,
-    and resuming past them would drop docs without an error."""
+    and resuming past them would drop docs without an error. Given
+    ``snapshot_id``, a committed row over another input snapshot raises:
+    the output would mix two versions of the input."""
     if not sink_exists(spark, lineage_path):
         return set()
     rows = (
         read_back(spark, lineage_path, LINEAGE_SCHEMA)
         .filter(F.col("run_id") == run_id)
-        .select("partition_id", "num_buckets")
+        .select("partition_id", "num_buckets", "snapshot_id")
         .collect()
     )
     if num_buckets is not None:
@@ -103,6 +109,15 @@ def committed_buckets(
                 f"{sorted(other, key=str)}; it cannot resume at num_buckets="
                 f"{num_buckets}: resume at the count it started with, or start "
                 f"a new run_id on an empty output"
+            )
+    if snapshot_id is not None:
+        other = {r.snapshot_id for r in rows} - {snapshot_id}
+        if other:
+            raise ValueError(
+                f"run {run_id!r} has buckets committed over input snapshot_id="
+                f"{sorted(other, key=str)}; it cannot resume over snapshot_id="
+                f"{snapshot_id}: resume over the snapshot it started with, or "
+                f"start a new run_id on an empty output"
             )
     return {r.partition_id for r in rows}
 
@@ -129,10 +144,12 @@ def run_with_lineage(
     bucket: then the kernel runs doc-level on k tasks and a second
     shuffle routes each bucket to its write task. A resume at another
     ``num_buckets`` than the run's committed rows raises before any
-    write. ``fail_after_commits`` injects a crash after k commits (resume
-    tests).
+    write. ``snapshot_id`` is the input version stamped on every lineage
+    row (job.py passes the table's, 0 for a parquet path); a resume over
+    another one than the committed rows' raises before any write too.
+    ``fail_after_commits`` injects a crash after k commits (resume tests).
     """
-    done = committed_buckets(spark, lineage_path, run_id, num_buckets)
+    done = committed_buckets(spark, lineage_path, run_id, num_buckets, snapshot_id)
     docs_b = with_partition_id(docs, num_buckets)
     pending = docs_b.filter(~F.col("partition_id").isin(sorted(done))) if done else docs_b
     # ONE input pass per run yields every pending bucket's lineage input

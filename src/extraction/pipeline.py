@@ -40,9 +40,13 @@ from .segment import extract_batches
 # docs with more spans than this are routed to the heavy tier
 HEAVY_SPAN_THRESHOLD = 1000
 
-# spans of kernel work that make a Python task worth its start-up: at
-# ~4 us of kernel CPU per span, 64k spans are ~0.25 s, about the 0.2 s of
-# CPU every Python task spends in set-up before it reads a row
+# spans of kernel work a Python task is sized to: the value the local[4]
+# group-sizing sweep was measured at (the CPU-optimal task count there was
+# at or below the one this gives). The ratio to the ~0.2 s of CPU every
+# Python task spends in set-up no longer derives it: the kernel takes ~2 us
+# of CPU per span on the text-heavy benchmark corpus and ~1.1 us on the
+# all-family one (one core of a 4-vCPU VM), so 64k spans are ~0.07-0.13 s
+# of kernel work. No benchmark workload's placement depends on it
 TASK_SPANS = 65536
 
 

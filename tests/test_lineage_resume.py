@@ -137,6 +137,25 @@ def test_resume_at_another_bucket_count_refuses(spark, docs, tmp_path):
     assert committed_buckets(spark, lin, "run-other", 4) == set()
 
 
+def test_resume_over_another_snapshot_refuses(spark, docs, tmp_path):
+    """A crash over input snapshot 1 and a resume of the same run over
+    snapshot 2: the committed buckets hold the old input's docs, so
+    skipping them would mix two versions of the input in one output. The
+    resume raises before any write and leaves output and lineage as
+    they were."""
+    out, lin = str(tmp_path / "out"), str(tmp_path / "lineage")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_with_lineage(spark, docs, out, lin, "run-snap", num_buckets=BUCKETS,
+                         buckets_per_commit=PER_COMMIT, snapshot_id=1,
+                         fail_after_commits=1)
+    before = _tree(tmp_path)
+    assert committed_buckets(spark, lin, "run-snap", BUCKETS, 1) == {0, 1}
+    with pytest.raises(ValueError, match=r"snapshot_id=\[1\].*snapshot_id=2"):
+        run_with_lineage(spark, docs, out, lin, "run-snap", num_buckets=BUCKETS,
+                         buckets_per_commit=PER_COMMIT, snapshot_id=2)
+    assert _tree(tmp_path) == before
+
+
 def test_resume_over_lineage_without_bucket_count_refuses(spark, docs, tmp_path):
     """A lineage written before ``num_buckets`` existed reads the column
     as null: the bucket count of its commits is unknown, so a resume
@@ -185,7 +204,7 @@ def test_sparse_input_commits_every_bucket(spark, tmp_path):
     assert all(r.min_hash <= r.max_hash for r in lrows if r.input_rows)
 
     run_with_lineage(spark, sparse, out, lin, "run-s", num_buckets=BUCKETS,
-                     buckets_per_commit=PER_COMMIT)
+                     buckets_per_commit=PER_COMMIT, snapshot_id=snapshot)
     assert spark.read.parquet(lin).count() == BUCKETS  # no row appended
 
 
