@@ -17,6 +17,7 @@ oracle       pure-Python per-doc reference semantics (the spec)
 pipeline     DataFrame wiring: read → repartition → mapInPandas → sink
 lineage      checkpoint table commit / idempotent resume
 corpus       deterministic synthetic docs corpus generator
+zipcache     drops zip importers so PySpark's per-task set-up re-reads no archive
 """
 
 __version__ = "0.1.0"

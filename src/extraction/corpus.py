@@ -212,8 +212,10 @@ def corpus_df(spark, n: int, seed: int = 42, heavy_spans: int = 2000, slices: in
     from indices, so the result is identical to :func:`gen_corpus`.
     """
     from .schema import DOCS_SCHEMA
+    from .zipcache import drop_zip_importers
 
     def gen_batches(iterator):
+        drop_zip_importers()
         import pandas as pd
 
         for pdf in iterator:

@@ -27,11 +27,12 @@ stage per group, and no heavy-doc guard scan. The one exception is a
 group with fewer buckets than cores and more than ~64k spans a bucket,
 where one task per bucket would leave cores idle through a long
 kernel: it runs the kernel doc-level (``run_extraction``'s placement)
-on its sized count, then shuffles to one write task per bucket. Every
-Python task costs ~0.2 s of CPU in set-up before it reads a row, which
-is why the task count follows the span mass, and why the lineage rows
-go to Spark as an Arrow table (a local scan), never as a list of rows
-parallelized through Python tasks. On the one-shuffle path a bucket is
+on its sized count, then shuffles to one write task per bucket. A Python
+worker's first task costs ~0.2 s of CPU in set-up before it reads a row
+(``zipcache``: later tasks on the same worker skip it), which is why the
+task count follows the span mass, and why the lineage rows go to Spark
+as an Arrow table (a local scan), never as a list of rows parallelized
+through Python tasks. On the one-shuffle path a bucket is
 the unit of placement: two enormous docs that hash to one bucket share
 a kernel task.
 

@@ -42,11 +42,12 @@ HEAVY_SPAN_THRESHOLD = 1000
 
 # spans of kernel work a Python task is sized to: the value the local[4]
 # group-sizing sweep was measured at (the CPU-optimal task count there was
-# at or below the one this gives). The ratio to the ~0.2 s of CPU every
-# Python task spends in set-up no longer derives it: the kernel takes ~2 us
-# of CPU per span on the text-heavy benchmark corpus and ~1.1 us on the
-# all-family one (one core of a 4-vCPU VM), so 64k spans are ~0.07-0.13 s
-# of kernel work. No benchmark workload's placement depends on it
+# at or below the one this gives). That sweep ran while every Python task
+# spent ~0.2 s of CPU in set-up; only a worker's first task does now
+# (zipcache), so re-run it before deriving the value from set-up. The
+# kernel takes ~2 us of CPU per span on the text-heavy benchmark corpus and
+# ~1.1 us on the all-family one (one core of a 4-vCPU VM), so 64k spans are
+# ~0.07-0.13 s of kernel work. No benchmark workload's placement depends on it
 TASK_SPANS = 65536
 
 
@@ -55,9 +56,10 @@ def group_partitions(num_partitions: int, spans: int, cores: int) -> int:
     ``cores`` tasks of at least ~TASK_SPANS spans each, capped at
     ``num_partitions``.
 
-    Every Python task pays a fixed set-up cost, so a small commit group
-    split into P partitions runs mostly set-up. Rounding up to a whole
-    wave keeps every core busy in the last one; a group of at least
+    Every Python task pays a fixed scheduling and transport cost, and a
+    worker's first task a set-up cost too, so a small commit group split
+    into P partitions runs mostly overhead. Rounding up to a whole wave
+    keeps every core busy in the last one; a group of at least
     ``num_partitions * TASK_SPANS`` spans keeps all ``num_partitions``.
     """
     waves = max(1, math.ceil(spans / (cores * TASK_SPANS)))

@@ -22,6 +22,7 @@ import pyarrow.compute as pc
 from . import constants as C
 from .classify import KIND_NAMES_PA, classify_flat
 from .postprocess import postprocess_doc
+from .zipcache import drop_zip_importers
 
 # soft cap on spans processed per kernel invocation — bounds peak memory
 # for media-heavy skew docs (FIXTURES.md §4) regardless of Arrow batch size
@@ -39,6 +40,7 @@ _OUT_SPAN_PA = pa.struct(
 
 def extract_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """mapInArrow entry point."""
+    drop_zip_importers()
     for rb in it:
         for sub in _split_by_budget(rb):
             yield _extract_one(sub)

@@ -172,6 +172,29 @@ def test_resume_over_lineage_without_bucket_count_refuses(spark, docs, tmp_path)
     assert _tree(tmp_path) == before
 
 
+def test_corrupt_input_file_fails_before_first_commit(spark, tmp_path):
+    """One input part file cut to half its size: the run raises, and it
+    commits nothing first, neither an output partition nor a lineage
+    file. The stats pre-pass reads every input file before any group
+    writes."""
+    src, out, lin = (str(tmp_path / n) for n in ("in", "out", "lineage"))
+    spark.createDataFrame(gen_corpus(N_DOCS, heavy_spans=100), schema=DOCS_SCHEMA) \
+        .repartition(4).write.parquet(src)
+    parts = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
+    assert len(parts) == 4
+    victim = os.path.join(src, parts[1])
+    with open(victim, "r+b") as f:
+        f.truncate(os.path.getsize(victim) // 2)
+    docs = spark.read.schema(DOCS_SCHEMA).parquet(src)
+    with pytest.raises(Py4JJavaError):
+        run_with_lineage(spark, docs, out, lin, "run-corrupt", num_buckets=BUCKETS,
+                         buckets_per_commit=PER_COMMIT)
+    assert not os.path.exists(lin)
+    assert not os.path.exists(out) or not [
+        d for d in os.listdir(out) if d.startswith("partition_id=")
+    ]
+
+
 def test_sparse_input_commits_every_bucket(spark, tmp_path):
     """3 docs over 8 buckets land in buckets 3, 4 and 5, so the first
     commit group {0, 1} writes no output at all. Every bucket still
