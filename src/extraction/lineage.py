@@ -9,12 +9,16 @@ run anti-joins the lineage table and processes only uncommitted buckets
 (SURVEY.md §4 "resume" row, FIXTURES.md §3 schema).
 
 Lineage counts ride along on passes that already happen. One
-``groupBy(partition_id)`` pre-pass per run yields each pending bucket's
-input stats (hash range, input rows, spans in); an ``Observation`` on
-the bucket write yields its output counts (rows, docs ok/empty, spans
-out). The driver builds a row for every bucket of the group, empty ones
-included, from those two dicts: no read-back of the committed files and
-no join.
+``groupBy(partition_id)`` pre-pass per run, which reads only
+``spans.kind`` of the spans, yields each pending bucket's input stats
+(hash range, input rows, spans in). The kernel's own tasks yield its
+output counts (rows, docs ok/empty, spans out): the kernel input keeps
+``partition_id``, and ``tally.extract_tally`` passes it through the
+kernel and counts each bucket's output into one accumulator per group,
+one entry per task partition, so a task Spark runs again replaces its
+entry instead of adding to it. The driver builds a row for every bucket
+of the group, empty ones included, from those two dicts: no read-back
+of the committed files, no join and no aggregate in the write's plan.
 
 The pre-pass also gives every bucket's exact span mass, so each group
 places WHOLE buckets on its kernel tasks: ``pipeline.lpt`` packs the
@@ -59,22 +63,25 @@ from __future__ import annotations
 
 import datetime
 import time
+from functools import partial
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from .catalog import append_rows, overwrite_buckets, read_back, sink_exists
-from .pipeline import (
+from .pipeline import (  # noqa: F401  run_extraction: perfbench times it by name
     TASK_SPANS,
     group_partitions,
     lpt,
     partition_index_salts,
+    repartition_packed,
     run_extraction,
     with_partition_id,
 )
 from .schema import LINEAGE_SCHEMA
+from .tally import COUNTS, TALLIED_SCHEMA, BucketTally, bucket_counts, extract_tally
 
 LINEAGE_ARROW = to_arrow_schema(LINEAGE_SCHEMA)
 
@@ -162,7 +169,9 @@ def run_with_lineage(
             F.min(F.xxhash64("doc_id")).alias("min_hash"),
             F.max(F.xxhash64("doc_id")).alias("max_hash"),
             F.count("*").alias("input_rows"),
-            F.sum(F.size("spans")).alias("spans_in"),
+            # the size of one leaf field is the span count: the pass reads
+            # spans.kind, not whole spans
+            F.sum(F.size("spans.kind")).alias("spans_in"),
         )
         .collect()
     }
@@ -196,31 +205,28 @@ def run_with_lineage(
         place = lpt(mass.items(), bins)
         salts = partition_index_salts(spark, bins)
         salt = F.create_map(*[x for b in todo for x in (F.lit(b), F.lit(int(salts[place[b]])))])
-        group = docs_b.filter(F.col("partition_id").isin(todo))
+        group = docs_b.filter(F.col("partition_id").isin(todo)).select(
+            "doc_id", "spans", "partition_id"
+        )
+        # the kernel's tasks count each bucket's output (tally.py); one
+        # accumulator per group, read once its write has returned
+        acc = spark.sparkContext.accumulator({}, BucketTally())
+        kernel = partial(extract_tally, acc)
         if spread:
-            extracted = with_partition_id(
-                run_extraction(group.select("doc_id", "spans"), k), num_buckets
-            ).repartition(bins, salt[F.col("partition_id")])
+            extracted = (
+                repartition_packed(group, k)
+                .mapInArrow(kernel, TALLIED_SCHEMA)
+                .repartition(bins, salt[F.col("partition_id")])
+            )
         else:
             # the kernel's own tasks write: one shuffle, one write stage
-            placed = group.repartition(bins, salt[F.col("partition_id")]).select("doc_id", "spans")
-            extracted = with_partition_id(run_extraction(placed), num_buckets)
-        # the output counts are observed in the write's result stage (after
-        # the group's last shuffle): Spark applies each successful task's
-        # metric update once, and the write itself is the only pass
-        pid, n = F.col("partition_id"), F.size("spans")
-        counts = {"output_rows": F.lit(True), "docs_ok": n > 0, "docs_empty": n == 0}
-        obs = Observation()
-        out = extracted.observe(
-            obs,
-            *[F.count_if((pid == b) & c).alias(f"{k}_{b}") for b in todo for k, c in counts.items()],
-            *[F.sum(F.when(pid == b, n)).alias(f"spans_out_{b}") for b in todo],
-        )
+            placed = group.repartition(bins, salt[F.col("partition_id")])
+            extracted = placed.mapInArrow(kernel, TALLIED_SCHEMA)
         # data first, lineage second: a crash between the two re-executes
         # the bucket (dynamic overwrite of the same subdirs — idempotent),
-        # and a failed write raises before the observation is read
-        overwrite_buckets(out, output_path, "partition_id")
-        got = obs.get
+        # and a failed write raises before the counts are read
+        overwrite_buckets(extracted, output_path, "partition_id")
+        counts = bucket_counts(acc.value)
         common = {
             "run_id": run_id,
             "snapshot_id": snapshot_id,
@@ -236,7 +242,7 @@ def run_with_lineage(
                 "max_hash": s.get("max_hash"),
                 "input_rows": s.get("input_rows", 0),
                 "spans_in": s.get("spans_in") or 0,
-                **{k: got.get(f"{k}_{b}") or 0 for k in (*counts, "spans_out")},
+                **dict(zip(COUNTS, counts.get(b, (0,) * len(COUNTS)))),
             }
             for b, s in zip(todo, stats)
         ]

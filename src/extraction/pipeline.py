@@ -201,9 +201,10 @@ def repartition_packed(
       join + one shuffle, exactly P partitions.
 
     The heavy tier is found by a guard scan (at most guard + 1 rows).
-    ``run_with_lineage`` does not come here: it places whole buckets by
-    their exact span mass from its own pre-pass, so the doc-level
-    placement is for direct callers of ``run_extraction``.
+    ``run_with_lineage`` places whole buckets by their exact span mass
+    from its own pre-pass, and comes here only for a commit group with
+    fewer buckets than cores and more than ``TASK_SPANS`` spans a
+    bucket, whose kernel runs doc-level.
     """
     P = num_partitions
     uniform = docs.repartition(max(1, P), F.xxhash64("doc_id"))

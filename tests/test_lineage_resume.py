@@ -2,8 +2,11 @@
 identical final table and no duplicate partitions."""
 
 import datetime
+import json
 import os
 import re
+import subprocess
+import sys
 
 import pytest
 from py4j.protocol import Py4JJavaError
@@ -338,6 +341,7 @@ def test_group_kernel_partitions_follow_span_mass(spark, tmp_path, monkeypatch, 
     shuffle = re.compile(r"Exchange hashpartitioning\(.*, (\d+)\), REPARTITION_BY_NUM")
     assert len(plans) == len(want)
     for plan, k in zip(plans, want):
+        assert "CollectMetrics" not in plan, plan
         assert plan.count("Exchange") == 1, plan
         assert [int(m) for m in shuffle.findall(plan)] == [k], plan
         assert "BroadcastHashJoin" not in plan, plan
@@ -394,6 +398,7 @@ def test_few_heavy_buckets_keep_every_core(spark, tmp_path, monkeypatch):
     shuffle = re.compile(r"Exchange hashpartitioning\(.*, (\d+)\), REPARTITION_BY_NUM")
     assert len(plans) == len(groups)
     for plan, m in zip(plans, mass):
+        assert "CollectMetrics" not in plan, plan
         # top-down: the routing shuffle into one write task per bucket
         # above the kernel, the kernel's own shuffle into k below it
         assert [int(x) for x in shuffle.findall(plan)] == [per_commit, group_partitions(p, m, cores)], plan
@@ -416,3 +421,158 @@ def test_missing_lineage_is_not_read(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(lineage, "read_back", unread)
     assert committed_buckets(spark, str(tmp_path / "never-written"), "run-m") == set()
+
+
+def test_stats_pre_pass_reads_only_span_kinds(spark, tmp_path, monkeypatch):
+    """The pre-pass's span count is the size of ``spans.kind``, so its
+    parquet scan decodes no span text, media ref or offset."""
+    src, out, lin = (str(tmp_path / n) for n in ("in", "out", "lineage"))
+    spark.createDataFrame(gen_corpus(N_DOCS, heavy_spans=100), schema=DOCS_SCHEMA) \
+        .write.parquet(src)
+    docs = spark.read.schema(DOCS_SCHEMA).parquet(src)
+    plans = []
+    collect = type(docs).collect
+
+    def recording(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return collect(df)
+
+    monkeypatch.setattr(type(docs), "collect", recording)
+    run_with_lineage(spark, docs, out, lin, "run-k", num_buckets=BUCKETS,
+                     buckets_per_commit=PER_COMMIT)
+    monkeypatch.undo()
+    (plan,) = [p for p in plans if "FileScan parquet" in p]
+    assert "ReadSchema: struct<doc_id:string,spans:array<struct<kind:string>>>" in plan, plan
+    assert sum(r.spans_in for r in spark.read.parquet(lin).collect()) == sum(
+        len(spans) for _, spans in gen_corpus(N_DOCS, heavy_spans=100)
+    )
+
+
+# Runs in its own session on local[4,2], which allows one retry per task
+# (the shared session allows none). The first kernel task of the first
+# commit group fails on its first attempt after it has emitted a batch.
+# On the doc-level ("spread") branch the kernel runs in a shuffle-map
+# stage: while that task is held, the map outputs of the stage's other
+# tasks are unregistered, as a lost executor would lose them, so Spark
+# runs those tasks again after they have succeeded once. Prints the
+# lineage rows and the read-back per-bucket aggregates as one JSON line.
+RETRY_JOB = r"""
+import json, os, sys, threading, time
+from pyspark import TaskContext
+from pyspark.sql import functions as F
+from extraction import lineage, pipeline
+from extraction.corpus import gen_corpus
+from extraction.job import build_session
+from extraction.pipeline import with_partition_id
+from extraction.schema import DOCS_SCHEMA
+
+branch, root = sys.argv[1], sys.argv[2]
+out, lin = os.path.join(root, "out"), os.path.join(root, "lineage")
+held, go = os.path.join(root, "held"), os.path.join(root, "go")
+spark = build_session("local[4,2]", shuffle_partitions=8, app="retry-test")
+sc = spark.sparkContext
+if branch == "spread":
+    heavy, p = 2000, 16
+    pipeline.TASK_SPANS = lineage.TASK_SPANS = 300
+else:
+    heavy, p = 100, None
+docs = spark.createDataFrame(gen_corpus(120, heavy_spans=heavy), schema=DOCS_SCHEMA)
+real = lineage.extract_tally
+
+def failing(acc, it):
+    ctx = TaskContext.get()
+    first = ctx.partitionId() == 0 and ctx.attemptNumber() == 0
+    for rb in real(acc, it):
+        yield rb
+        if not first:
+            continue
+        first = False
+        try:  # once per run
+            fd = os.open(held, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        except FileExistsError:
+            continue
+        os.write(fd, str(ctx.stageId()).encode())
+        os.close(fd)
+        deadline = time.monotonic() + 120
+        while branch == "spread" and not os.path.exists(go) and time.monotonic() < deadline:
+            time.sleep(0.05)
+        raise RuntimeError("injected task failure")
+
+lost = []
+
+def held_stage():
+    if os.path.exists(held):
+        with open(held) as f:
+            return f.read()
+
+def lose_map_outputs():
+    deadline = time.monotonic() + 120
+    while time.monotonic() < deadline:
+        if held_stage():
+            info = sc.statusTracker().getStageInfo(int(held_stage()))
+            if info and info.numCompletedTasks == info.numTasks - 1:
+                break
+        time.sleep(0.05)
+    tracker = sc._jvm.org.apache.spark.SparkEnv.get().mapOutputTracker()
+    # the newest shuffle is the one the held stage writes
+    shuffle = max(i for i in range(1000) if tracker.containsShuffle(i))
+    lost.append(tracker.getNumAvailableOutputs(shuffle))
+    tracker.unregisterAllMapAndMergeOutput(shuffle)
+    open(go, "w").close()
+
+if branch == "spread":
+    threading.Thread(target=lose_map_outputs, daemon=True).start()
+lineage.extract_tally = failing
+lineage.run_with_lineage(spark, docs, out, lin, "run-retry", num_buckets=8,
+                         buckets_per_commit=2, num_partitions=p)
+
+def by_bucket(df, *aggs):
+    return {r.partition_id: r.asDict() for r in df.groupBy("partition_id").agg(*aggs).collect()}
+
+n = F.size("spans")
+got = by_bucket(
+    spark.read.parquet(out),
+    F.count("*").alias("output_rows"),
+    F.count_if(n > 0).alias("docs_ok"),
+    F.count_if(n == 0).alias("docs_empty"),
+    F.sum(n).alias("spans_out"),
+)
+got_in = by_bucket(
+    with_partition_id(docs, 8),
+    F.count("*").alias("input_rows"),
+    F.sum(n).alias("spans_in"),
+)
+for b, row in got_in.items():
+    got.setdefault(b, {}).update(row)
+rows = [r.asDict() for r in spark.read.parquet(lin).drop("committed_at").collect()]
+print("RETRY_RESULT " + json.dumps({
+    "lineage": rows, "got": got, "held": os.path.exists(held), "lost": lost,
+}))
+"""
+
+
+@pytest.mark.parametrize("branch", ["whole", "spread"])
+def test_task_retry_counts_each_bucket_once(tmp_path, branch):
+    """A kernel task that fails after emitting a batch and succeeds on
+    its retry, and (doc-level branch) kernel tasks that Spark runs again
+    after their map outputs are lost: every lineage row still equals the
+    read-back per-bucket aggregates of the written output and the
+    input."""
+    env = {**os.environ, "EXTRACTION_DRIVER_MEM": "1g"}
+    done = subprocess.run(
+        [sys.executable, "-c", RETRY_JOB, branch, str(tmp_path)],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert done.returncode == 0, done.stderr[-4000:]
+    (line,) = [x for x in done.stdout.splitlines() if x.startswith("RETRY_RESULT ")]
+    res = json.loads(line.removeprefix("RETRY_RESULT "))
+    assert res["held"]  # the injected failure ran
+    assert "injected task failure" in done.stderr
+    if branch == "spread":
+        assert res["lost"] and res["lost"][0] > 0, res["lost"]
+    rows = {r["partition_id"]: r for r in res["lineage"]}
+    got = {int(b): v for b, v in res["got"].items()}
+    assert sorted(rows) == list(range(8))
+    assert sorted(got) == list(range(8))
+    for b, row in rows.items():
+        assert {k: row[k] for k in got[b]} == got[b], b
